@@ -22,6 +22,20 @@ import org.apache.spark.sql.SparkSession
   * provider-agnostic (RocksDbStateStoreSpec pins identical output on
   * both providers), and the replay harnesses propagate the caller's
   * provider choice into their child sessions.
+  *
+  * ==Local filesystem==
+  * `file:` resolves to [[ForkFreeLocalFileSystem]] (and, for
+  * `FileContext`, [[ForkFreeLocalFs]]). Without Hadoop's native library
+  * the stock local filesystem starts a `chmod` process for every file,
+  * `.crc` and directory it creates and a `readlink` process for every
+  * checkpoint rename; on the ingest sink that was most of a write task's
+  * time. Files, `.crc` siblings and modes are the stock ones. Hadoop
+  * caches one `FileSystem` per scheme and user whatever the
+  * implementation class, so the setting is made in [[builder]], before
+  * the context's first `file:` lookup, not in [[init]]: a session built
+  * elsewhere and passed to `init` (as `Verify` does) keeps the stock
+  * class, and so does any session in a JVM whose first `file:`
+  * filesystem came from another configuration.
   */
 object GraftSession {
 
@@ -45,6 +59,8 @@ object GraftSession {
       // TimestampType — nothing is lost, stats and pushdown come back.
       .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
       .config("spark.ui.enabled", "false")
+      .config("spark.hadoop.fs.file.impl", classOf[ForkFreeLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[ForkFreeLocalFs].getName)
 
   def apply(master: String = "local[32]", appName: String = "graft"): SparkSession = {
     val spark = builder(master, appName).getOrCreate()

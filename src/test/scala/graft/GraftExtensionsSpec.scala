@@ -29,7 +29,10 @@ class GraftExtensionsSpec extends AnyFunSuite {
     // shared-context suite would be the GraftSession whose registerAll
     // already exposed these names, making the test vacuous. Clear the
     // handles so a genuinely FRESH session (new sessionState, only the
-    // injected functions) is built on the shared context.
+    // injected functions) is built on the shared context. Build the
+    // suite's GraftSession first, so the shared context is GraftSession's
+    // whichever suite runs first: one built here lacks its settings.
+    SparkSpec.spark
     val prevDefault = SparkSession.getDefaultSession
     val prevActive = SparkSession.getActiveSession
     SparkSession.clearActiveSession()
