@@ -51,6 +51,11 @@ final case class IngestPipeline[T <: Product : TypeTag](
 
   private implicit def routedEncoder: Encoder[Routed[T]] = Encoders.product[Routed[T]]
 
+  /** Event-hour span (max − min + 1) of the last flush that wrote rows;
+    * `None` before the first. `foreachBatch` runs on the driver, one
+    * batch at a time per query. */
+  @volatile private[ingest] var lastHourSpan: Option[Long] = None
+
   /** flatMap 1→N with drop and failure routing (A3/A4/A5). */
   def route(envs: Dataset[Envelope]): Dataset[Routed[T]] = {
     val tf = transformer
@@ -79,10 +84,14 @@ final case class IngestPipeline[T <: Product : TypeTag](
       // would be the scale bug; `observe` computes the aggregates during
       // the sink scan for free.
       val obs = org.apache.spark.sql.Observation(s"graft-batch-$batchId")
+      val eventHour = TimeKeys.epochHour(
+        eventTimeCol.map(c => col(s"value.$c")).getOrElse(current_timestamp()))
       val observed = batch.observe(obs,
         sum(when(col("value").isNotNull, 1L).otherwise(0L)).as("good"),
         sum(when(col("error").isNotNull, 1L).otherwise(0L)).as("bad"),
-        sum(when(col("value").isNull && col("error").isNull, 1L).otherwise(0L)).as("dropped"))
+        sum(when(col("value").isNull && col("error").isNull, 1L).otherwise(0L)).as("dropped"),
+        min(when(col("value").isNotNull, eventHour)).as("hour_lo"),
+        max(when(col("value").isNotNull, eventHour)).as("hour_hi"))
 
       // Sampled payload logging (A22 analog): every Nth batch, log one
       // truncated payload — debugging visibility without log flood.
@@ -97,10 +106,28 @@ final case class IngestPipeline[T <: Product : TypeTag](
       // "flush workers" (A17): write parallelism = task count. Read per
       // batch so the adaptive loop's live [[WorkerControl]] action (keyed
       // by `controlId`) takes effect on the NEXT flush of a running
-      // query; `writePartitions` is the static fallback.
+      // query; `writePartitions` is the static fallback, and
+      // `defaultParallelism` the clustered plan's default. The count is
+      // explicit because AQE stays on inside `foreachBatch`: it would
+      // coalesce a keyed shuffle without one (or a `rebalance` hint)
+      // onto fewer writer tasks.
       val parts = controlId.flatMap(WorkerControl.get).orElse(writePartitions)
-      val sized = parts.map(good.repartition).getOrElse(good)
-      val keyed = TimeKeys.withUtcKeys(sized, ts)
+      // A flush that spans several hours is hash-partitioned by its time
+      // key, so each hour directory gets one file per flush (more only
+      // where `maxRecordsPerFile` splits it), not one per task holding
+      // rows of that hour. The span is known only after the write, so
+      // the choice follows the last flush that wrote rows; the first
+      // flush, which drains the backlog built up while the pipeline was
+      // down, is clustered. A single-hour flush (a live micro-batch)
+      // keeps the round-robin plan, or none: a shuffle there costs more
+      // ack latency than its files save.
+      val clustered = eventTimeCol.isDefined && lastHourSpan.forall(_ > 1)
+      val keyed =
+        if (clustered)
+          TimeKeys.withUtcKeys(good, ts).repartition(
+            parts.getOrElse(batch.sparkSession.sparkContext.defaultParallelism),
+            TimeKeys.PartitionColumns.map(col): _*)
+        else TimeKeys.withUtcKeys(parts.map(good.repartition).getOrElse(good), ts)
       retry {
         val w = keyed.write
           .mode("append")
@@ -115,6 +142,11 @@ final case class IngestPipeline[T <: Product : TypeTag](
         case _ => 0L // all-NULL sum on an empty batch
       }
       val (nGood, nBad) = (cnt("good"), cnt("bad"))
+      val hours = (m.get("hour_lo"), m.get("hour_hi")) match {
+        case (Some(lo: Long), Some(hi: Long)) => hi - lo + 1
+        case _ => 0L // no rows written: keep the last span
+      }
+      if (hours > 0) lastHourSpan = Some(hours)
       IngestMetrics.inc(IngestMetrics.RecordsTransformed, nGood)
       IngestMetrics.inc(IngestMetrics.TransformErrors, nBad)
       IngestMetrics.inc(IngestMetrics.MessagesDropped, cnt("dropped"))
@@ -125,15 +157,18 @@ final case class IngestPipeline[T <: Product : TypeTag](
       // reference's -1 streaming-path sentinel (ingestor.go:578): Spark's
       // parquet writer streams row groups straight to the sink (A11), so
       // — exactly like the reference's stream-write branch — no buffered
-      // byte count exists at log time. `batch` is an addition, not a
-      // replacement.
+      // byte count exists at log time. `batch`, `hours` (the event-hour
+      // span written, 0 for an empty flush) and `clustered` (whether the
+      // rows were partitioned by hour) are additions, not replacements.
       log.info("ingest.flush.sink_write_succeeded",
         "key" -> sinkPath,
         "path" -> SinkPath.display(sinkPath),
         "file_name" -> SinkPath.fileName(sinkPath),
         "items" -> nGood,
         "bytes" -> -1L,
-        "batch" -> batchId)
+        "batch" -> batchId,
+        "hours" -> hours,
+        "clustered" -> clustered)
 
       dlqPath.foreach { p =>
         // Second scan of the route flatMap, taken only on batches that

@@ -7,9 +7,11 @@ import org.apache.spark.sql.functions._
   * `YYYY/MM/DD/HH/<unique-file>` object-key scheme
   * (/root/reference/ingestor/ingestor.go:771-798). In Spark the key
   * becomes hive-style partition directories `y=YYYY/m=MM/d=DD/h=HH` with
-  * task-unique part-file names — the same prunable time layout with
-  * collision-free files, produced in parallel per partition instead of
-  * one key per flush.
+  * task-unique part-file names. A flush that spans several hours is
+  * hash-partitioned by the key first, so, as in the reference, each hour
+  * directory gets one file per flush (more only where `maxRecordsPerFile`
+  * splits it), and the hours are written in parallel. A single-hour flush
+  * writes one file per write task into its one directory.
   */
 object TimeKeys {
   val PartitionColumns: Seq[String] = Seq("y", "m", "d", "h")
@@ -22,6 +24,9 @@ object TimeKeys {
       .withColumn("m", date_format(ts, "MM"))
       .withColumn("d", date_format(ts, "dd"))
       .withColumn("h", date_format(ts, "HH"))
+
+  /** Whole hours since the epoch of `ts` (UTC), the flush's span unit. */
+  def epochHour(ts: Column): Column = floor(unix_timestamp(ts) / 3600)
 
   /** Partition predicate selecting hours in `[fromHour, toHour]`, both
     * formatted `yyyy-MM-dd HH` (UTC, inclusive). The zero-padded

@@ -118,6 +118,15 @@ object IngestGate {
   /** Fixed scratch root for ig03 (content oracle, own wiped dir). */
   val OnceRoot = s"${sys.props("user.dir")}/fixtures/igate/once"
 
+  /** A17 flush workers of the ig01–ig03 pipelines. Historical orders
+    * give nearly every record its own (y,m,d,h), so each micro-batch
+    * touches ~250 hour directories. A batch that spans several hours is
+    * hash-partitioned by hour, so each directory gets one file, and the
+    * 8 tasks write the ~250 files in parallel (on one task the creates
+    * ran in sequence, ~2.5 s per batch; 16 tasks gained nothing over 8).
+    * The rows are the same whatever the count; only the files change. */
+  private val FlushWorkers = 8
+
   /** Fixed scratch root for sc01 (content oracle, own wiped dir). */
   val DriftRoot = s"${sys.props("user.dir")}/fixtures/igate/drift"
 
@@ -199,15 +208,7 @@ object IngestGate {
       dlqPath = Some(s"$root/dlq"),
       retry = SimpleRetry(attempts = 3),
       eventTimeCol = Some("event_ts"),
-      // A17 flush workers, sized for this gate's write shape (r16
-      // directive #3): historical orders give nearly every record a
-      // unique (y,m,d,h), so each micro-batch creates ~250 partition
-      // directories — on ONE task that is ~250 sequential parquet file
-      // creates (~2.5 s/batch measured); 8 flush workers write them
-      // concurrently (1.1 s/batch, 16 gains nothing further). Row
-      // content and directory layout are unchanged — only the file
-      // parallelism within the batch.
-      writePartitions = Some(8))
+      writePartitions = Some(FlushWorkers))
 
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     implicit val envEnc: org.apache.spark.sql.Encoder[Envelope] =
@@ -263,15 +264,7 @@ object IngestGate {
       dlqPath = Some(s"$root/dlq"),
       retry = SimpleRetry(attempts = 3),
       eventTimeCol = Some("event_ts"),
-      // A17 flush workers, sized for this gate's write shape (r16
-      // directive #3): historical orders give nearly every record a
-      // unique (y,m,d,h), so each micro-batch creates ~250 partition
-      // directories — on ONE task that is ~250 sequential parquet file
-      // creates (~2.5 s/batch measured); 8 flush workers write them
-      // concurrently (1.1 s/batch, 16 gains nothing further). Row
-      // content and directory layout are unchanged — only the file
-      // parallelism within the batch.
-      writePartitions = Some(8))
+      writePartitions = Some(FlushWorkers))
     val markers = s"$root/markers"
     val armCrash = new java.util.concurrent.atomic.AtomicBoolean(false)
     val replaysSkipped = new java.util.concurrent.atomic.AtomicInteger(0)

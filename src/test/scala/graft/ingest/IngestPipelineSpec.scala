@@ -228,6 +228,103 @@ class IngestPipelineSpec extends SparkSpec {
       .count(_.toString.endsWith(".parquet"))
     assert(parts >= 10, s"95 records at <=10/file should give >=10 files, got $parts")
   }
+
+  // Flush layout: a flush that spans several hours is clustered by its
+  // time key (one file per hour directory); a single-hour flush keeps the
+  // unshuffled per-task plan.
+
+  private def stampedPipeline(sink: String, parts: Option[Int] = None) =
+    IngestPipeline[Stamped](new StampedTransformer, sink, s"$sink-cp",
+      eventTimeCol = Some("ts"), writePartitions = parts)
+
+  /** `n` envelopes `id,ts`; row `i` falls in hour `hours(i % hours.size)`
+    * of 2024-03-01, so every input partition holds every hour. */
+  private def envs(n: Int, hours: Seq[Int], from: Int = 0): org.apache.spark.sql.Dataset[Envelope] =
+    spark.createDataset((from until from + n).map { i =>
+      Envelope(f"$i,2024-03-01 ${hours(i % hours.size)}%02d:${i % 60}%02d:00", Map.empty[String, String])
+    })(org.apache.spark.sql.Encoders.product[Envelope])
+
+  /** `.parquet` files per leaf directory under `sink`. */
+  private def filesPerDir(sink: String): Map[String, Int] = {
+    val files = java.nio.file.Files.walk(java.nio.file.Paths.get(sink)).iterator()
+    scala.jdk.CollectionConverters.IteratorHasAsScala(files).asScala
+      .filter(_.toString.endsWith(".parquet")).toSeq
+      .groupBy(_.getParent.toString).map { case (d, fs) => d -> fs.size }
+  }
+
+  /** Shuffle-write bytes of the Spark jobs `f` runs on this thread,
+    * found by job group on the listener bus. */
+  private def shuffleWriteBytes(f: => Unit): Long = {
+    import org.apache.spark.scheduler._
+    val group = s"flush-${System.nanoTime()}"
+    val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val jobs = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val ended = new java.util.concurrent.atomic.AtomicInteger(0)
+    val bytes = new java.util.concurrent.atomic.AtomicLong(0L)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group)) {
+          e.stageIds.foreach(stages.add); jobs.add(e.jobId); ()
+        }
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+        if (stages.contains(e.stageInfo.stageId)) {
+          bytes.addAndGet(e.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten); ()
+        }
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        if (jobs.contains(e.jobId)) { ended.incrementAndGet(); () }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "flush under test")
+      try f finally sc.clearJobGroup()
+      // The bus is asynchronous: wait for every job of the group to end.
+      val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
+      while ((jobs.isEmpty || ended.get() < jobs.size) && System.nanoTime() < deadline) Thread.sleep(50)
+      assert(jobs.size > 0 && ended.get() == jobs.size, s"${ended.get()} of ${jobs.size} jobs ended")
+      bytes.get()
+    } finally sc.removeSparkListener(listener)
+  }
+
+  for ((label, parts) <- Seq("default workers" -> None, "writePartitions = 3" -> Some(3))) {
+    test(s"a multi-hour event-time flush writes one file per hour directory ($label)") {
+      val sink = s"${tmpDir("cluster")}/sink"
+      val p = stampedPipeline(sink, parts)
+      val in = envs(120, Seq(3, 4, 5, 6, 7, 8))
+      assert(in.rdd.getNumPartitions > 1)
+      p.processBatch(p.route(in), 0L)
+      val perDir = filesPerDir(sink)
+      assert(perDir.size == 6 && perDir.keys.forall(_.contains("/h=0")), perDir)
+      assert(perDir.values.forall(_ == 1), s"files per hour directory: $perDir")
+      assert(spark.read.parquet(sink).count() == 120)
+      assert(p.lastHourSpan.contains(6L))
+    }
+  }
+
+  test("the second flush of a single-hour stream runs no shuffle and writes one file per task") {
+    val sink = s"${tmpDir("single")}/sink"
+    val p = stampedPipeline(sink)
+    val first = envs(40, Seq(10))
+    // The first flush is clustered whatever its span: the control that
+    // the listener sees a shuffle when there is one.
+    assert(shuffleWriteBytes(p.processBatch(p.route(first), 0L)) > 0L)
+    assert(p.lastHourSpan.contains(1L))
+    val before = filesPerDir(sink).values.sum
+    val second = envs(40, Seq(10), from = 40)
+    assert(shuffleWriteBytes(p.processBatch(p.route(second), 1L)) == 0L)
+    assert(filesPerDir(sink).values.sum - before == second.rdd.getNumPartitions,
+      "an unclustered flush writes one file per input partition, as before")
+    assert(spark.read.parquet(sink).count() == 80)
+  }
+
+  test("an empty flush leaves the stored hour span unchanged") {
+    val sink = s"${tmpDir("empty")}/sink"
+    val p = stampedPipeline(sink)
+    p.processBatch(p.route(envs(30, Seq(1, 2, 3))), 0L)
+    assert(p.lastHourSpan.contains(3L))
+    p.processBatch(p.route(envs(0, Seq(1))), 1L)
+    assert(p.lastHourSpan.contains(3L))
+  }
 }
 
 class TimeKeysSpec extends SparkSpec {

@@ -60,5 +60,9 @@ class SinkPathSpec extends SparkSpec {
       kv("path").toString.endsWith("/sink"))
     assert(kv("file_name") == "sink")
     assert(kv("items") == 1L)
+    // processing time: every row gets one timestamp, so one hour, and
+    // such a flush is never clustered
+    assert(kv("hours") == 1L)
+    assert(kv("clustered") == false)
   }
 }
