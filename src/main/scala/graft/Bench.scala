@@ -92,11 +92,7 @@ object Bench {
     // hits pass k of many queries, not all 3 passes of one query) and the
     // per-query median across passes.
     val passes = sys.env.getOrElse("SPARK_GRAFT_BENCH_PASSES", "3").toInt
-    val spark = GraftSession.builder(s"local[$cpus]", "graft-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    GraftSession.init(spark)
+    val spark = GraftSession(s"local[$cpus]", "graft-bench")
 
     // Warm the JVM/codegen/file-index paths outside the measurements.
     SparkEntry.queries("q01_scan")(spark, sfDir).collect()

@@ -2,13 +2,25 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Session factory for the graft engine.
+/** Session factory for the graft engine: every graft session, the
+  * benchmark's, `Verify`'s and `PlanDump`'s included, is built here.
   *
-  * Tuned for the driver's local[32] harness but every setting is the one
-  * you'd want on a real cluster too: AQE on (runtime join-strategy switch,
-  * skew-join splitting, partition coalescing), UTC session time zone for
-  * cross-engine timestamp parity, shuffle partitions sized to the core
-  * count rather than the 200 default.
+  * AQE on (runtime join-strategy switch, skew-join splitting, partition
+  * coalescing), UTC session time zone for cross-engine timestamp parity,
+  * and shuffle partitions sized to the cores rather than the 200 default.
+  *
+  * ==Shuffle partitions==
+  * One per core the master runs: [[apply]] sets
+  * `spark.sql.shuffle.partitions` to the context's `defaultParallelism`,
+  * which is 1 for `local`, n for `local[n]` and `local[n,f]`, the JVM's
+  * available processors for `local[*]`, and the executors' total cores
+  * on a cluster. It is set on the session at runtime, after the context
+  * exists, so a caller's own `spark.conf.set` afterwards wins, a session
+  * built from [[builder]] alone keeps Spark's default of 200, and so does
+  * a `newSession()` child, which does not inherit runtime conf. A
+  * streaming query restarted from an existing checkpoint keeps the
+  * partition count recorded in that checkpoint, whatever the session
+  * says.
   *
   * ==Streaming state store==
   * Stateful streaming (dedup, session windows, stream-stream joins,
@@ -33,18 +45,17 @@ import org.apache.spark.sql.SparkSession
   * caches one `FileSystem` per scheme and user whatever the
   * implementation class, so the setting is made in [[builder]], before
   * the context's first `file:` lookup, not in [[init]]: a session built
-  * elsewhere and passed to `init` (as `Verify` does) keeps the stock
-  * class, and so does any session in a JVM whose first `file:`
-  * filesystem came from another configuration.
+  * elsewhere and passed to `init` keeps the stock class, and so does any
+  * session in a JVM whose first `file:` filesystem came from another
+  * configuration.
   */
 object GraftSession {
 
-  def builder(master: String = "local[32]", appName: String = "graft"): SparkSession.Builder =
+  def builder(master: String = "local[*]", appName: String = "graft"): SparkSession.Builder =
     SparkSession
       .builder()
       .master(master)
       .appName(appName)
-      .config("spark.sql.shuffle.partitions", "32")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
@@ -62,8 +73,9 @@ object GraftSession {
       .config("spark.hadoop.fs.file.impl", classOf[ForkFreeLocalFileSystem].getName)
       .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[ForkFreeLocalFs].getName)
 
-  def apply(master: String = "local[32]", appName: String = "graft"): SparkSession = {
+  def apply(master: String = "local[*]", appName: String = "graft"): SparkSession = {
     val spark = builder(master, appName).getOrCreate()
+    spark.conf.set("spark.sql.shuffle.partitions", spark.sparkContext.defaultParallelism.toLong)
     spark.sparkContext.setLogLevel("WARN")
     init(spark)
     warmSharedPools(spark)

@@ -17,6 +17,9 @@ package graft
   *   --lazy            spark.graft.dedup.materialize=none, so operators
   *                     built on withWorkingSet/roundCheckpoint expose
   *                     their FULL lazy plan instead of a checkpoint leaf
+  *   --plans-md        regenerate PLANS.md: the formatted plans of the
+  *                     headline entries, at the --sf scale on --cpus
+  *                     cores (PLANS.md is committed at --cpus 4)
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
@@ -28,13 +31,14 @@ object PlanDump {
     var cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     var lazyMode = false
     var jobs = false
+    var plansMd = false
     val names = scala.collection.mutable.ListBuffer.empty[String]
     var i = 0
     def operand(flag: String): String = {
       if (i + 1 >= args.length)
         sys.error(s"PlanDump: $flag needs a value " +
           "(usage: [--sf DIR] [--formatted] [--save DIR] [--suffix S] " +
-          "[--time N] [--cpus N] [--lazy] [--jobs] <query names...>)")
+          "[--time N] [--cpus N] [--lazy] [--jobs] [--plans-md] <query names...>)")
       args(i + 1)
     }
     while (i < args.length) {
@@ -47,19 +51,18 @@ object PlanDump {
         case "--cpus" => cpus = operand("--cpus"); i += 2
         case "--lazy" => lazyMode = true; i += 1
         case "--jobs" => jobs = true; i += 1
+        case "--plans-md" => plansMd = true; i += 1
         case n => names += n; i += 1
       }
     }
-    // Mirror the bench session exactly so timings are comparable.
-    val spark = GraftSession.builder(s"local[$cpus]", "plan-dump")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .getOrCreate()
+    // The bench's session at the same core count, so timings are comparable.
+    val spark = GraftSession(s"local[$cpus]", "plan-dump")
     spark.sparkContext.setLogLevel("ERROR")
-    GraftSession.init(spark)
     if (lazyMode)
       spark.conf.set(graft.operators.TextDedup.MaterializeConf, "none")
     // Same warm-up as Bench: JVM/codegen/file-index outside measurements.
     SparkEntry.queries("q01_scan")(spark, sf).collect()
+    if (plansMd) writePlansMd(spark, sf, cpus)
     for (name <- names) {
       val q = SparkEntry.allQueries.find(_.name == name).getOrElse(
         sys.error(s"PlanDump: unknown query '$name' — names are the " +
@@ -111,5 +114,38 @@ object PlanDump {
       }
     }
     spark.stop()
+  }
+
+  /** The headline entries whose plans PLANS.md shows. */
+  val PlansMdEntries: Seq[String] = Seq(
+    "q01_scan", "q02_filter", "q03_join_inner", "q04_join_multi_agg",
+    "q09_join_theta", "q12_approx_distinct", "q15_window_rank",
+    "q17_topk", "q22_math_case", "q26_similarity_brute",
+    "q26_similarity_ann", "q31_tpch3_shape", "q35_tpch5_shape",
+    "q36_tpch10_shape", "tp03_token_packing", "up01_latest_by_key",
+    "qs02_percentile_approx",
+    "qr01_global_ranks", "dd01_exact_text", "dd02_minhash_lsh",
+    "dd06_simhash_pairs", "tp01_training_pipeline", "q10_string_agg",
+    "aj01_asof_last_purchase", "aj02_asof_next_purchase")
+
+  private def writePlansMd(spark: org.apache.spark.sql.SparkSession, sf: String,
+      cores: String): Unit = {
+    val scale = java.nio.file.Paths.get(sf).getFileName
+    val sb = new StringBuilder
+    sb.append(s"# PLANS — formatted physical plans of headline queries ($scale)\n\n")
+    sb.append(s"Generated by `runMain graft.PlanDump --plans-md --cpus $cores` (local[$cores]). What to\n")
+    sb.append("look for: `PushedFilters` and pruned `ReadSchema` on scans,\n")
+    sb.append("`BroadcastHashJoin` for dimension joins, `partial_` aggregates before\n")
+    sb.append("exchanges (map-side combine), `TakeOrderedAndProject` for top-k, and\n")
+    sb.append("wide `WholeStageCodegen` spans. `qr01_global_ranks` is the two-phase\n")
+    sb.append("distributed rank: its plan is a scan over the phase-2 RDD — the point\n")
+    sb.append("is what it does NOT contain (no Window, no SinglePartition exchange).\n")
+    PlansMdEntries.foreach { name =>
+      val plan = SparkEntry.queries(name)(spark, sf).queryExecution.explainString(
+        org.apache.spark.sql.execution.FormattedMode)
+      sb.append(s"\n## $name\n\n```\n$plan```\n")
+    }
+    java.nio.file.Files.writeString(java.nio.file.Paths.get("PLANS.md"), sb.toString)
+    println(s"PLANS.md written (${PlansMdEntries.size} plans)")
   }
 }

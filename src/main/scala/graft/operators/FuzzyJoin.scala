@@ -176,9 +176,10 @@ object FuzzyJoin {
             .distinct()
           cand
             .filter(abs(length(col("s_a")) - length(col("s_b"))) <= maxDistance)
-            // computed ONCE (withColumn + filter on the column): the
-            // filter(expr)/select(expr) pair evaluated levenshtein twice
-            // per surviving candidate.
+            // Catalyst inlines `dist` back into the filter, so the plan
+            // still evaluates levenshtein in the filter and the project
+            // (VERDICT.md, "What's wrong" item 2); this shape is only the
+            // simpler one.
             .withColumn("dist", levenshtein(col("s_a"), col("s_b")))
             .filter(col("dist") <= maxDistance)
             .select(col("id_a"), col("id_b"), col("dist"))
@@ -298,9 +299,9 @@ object FuzzyJoin {
             .distinct()
           cand
             // admissible-length window first (cheap; 1e-9 slack keeps it
-            // conservative), then the exact verify decides — jw computed
-            // ONCE per candidate (the filter(expr)/select(expr) pair
-            // evaluated it twice per surviving pair)
+            // conservative), then the exact verify decides (jw is still
+            // evaluated in the filter and the project: VERDICT.md,
+            // "What's wrong" item 2)
             .filter(greatest(length(col("s_a")), length(col("s_b"))) * ratio <=
               least(length(col("s_a")), length(col("s_b"))) + lit(1e-9))
             .withColumn("__jw", graft.functions.jaro_winkler(col("s_a"), col("s_b")))
@@ -351,8 +352,8 @@ object FuzzyJoin {
                          window: Int = 3, maxDistance: Int = 2): DataFrame = {
     require(maxDistance >= 0, s"maxDistance must be >= 0, got $maxDistance")
     neighborhoodCandidates(df, idCol, strCol, window)
-      // computed ONCE (withColumn + filter): the filter/select pair
-      // evaluated levenshtein twice per surviving candidate
+      // levenshtein is evaluated in both the filter and the project
+      // (VERDICT.md, "What's wrong" item 2)
       .withColumn("dist", levenshtein(col("s_a"), col("s_b")))
       .filter(col("dist") <= maxDistance)
       .select(col("id_a"), col("id_b"), col("s_a"), col("s_b"), col("dist"))

@@ -75,7 +75,7 @@ object IvfIndex {
   /** Size-derived list count: the standard √N-lists IVF heuristic
     * (build cost and per-probe scan balance at √N), clamped to
     * [4, 65536] and to the corpus size (KMeans needs k <= N). The
-    * round-14 probe (NOTES.md, `Test/runMain Round14IvfProbe`) measured
+    * round-14 probe (NOTES.md; `Round14IvfProbe` at commit `e960c89`) measured
     * the shape on the sf1 corpus (20k vectors x 64 dims, near-random):
     * at a FIXED probed fraction recall@5 RISES with nLists (frac 1/4:
     * 0.55 → 0.57 → 0.85 across 16/64/256 lists — finer partitions

@@ -258,7 +258,7 @@ object Layout {
     // Bucket-ALIGN the batch before the insert: without it every append
     // writes up to (shuffle tasks × nBuckets) files — measured 257/night
     // at 32 tasks × 8 buckets, 5,397 files and a 4× nightly-query
-    // slowdown after 20 nights (Round20BandIndexProbe) — exactly the
+    // slowdown after 20 nights (Round20BandIndexProbe, commit e960c89) — exactly the
     // small-file failure mode the compaction lifecycle exists to kill.
     // repartition's hash IS the bucket-id hash, so each task holds one
     // bucket and the bucketed writer emits ≤ nBuckets files per append;

@@ -378,7 +378,8 @@ object ProductQuantizer {
     * ranks lists and builds per-list residuals from it). Collecting
     * the single row — bounded by the contract being enforced — and
     * re-issuing it as a LOCAL 1-row relation makes every later use
-    * free instead of a corpus re-scan per use (Round18IvfPqProbe:
+    * free instead of a corpus re-scan per use (Round18IvfPqProbe at
+    * commit `e960c89`:
     * the re-scans, not the pruned code read, dominated indexed-probe
     * latency at 1M vectors). `who` names the caller in the errors. */
   private def oneProbeLocal(probe: DataFrame, who: String): DataFrame = {
@@ -1017,7 +1018,7 @@ object ProductQuantizer {
     // one collect does the contract check AND pins the probe locally:
     // the IVF search needs the probe THREE more times (probe id, list
     // ranking, per-list residual tables) and a corpus-derived probe
-    // frame must not be re-scanned per use (Round18IvfPqProbe)
+    // frame must not be re-scanned per use (Round18IvfPqProbe, commit e960c89)
     val local = oneProbeLocal(probe, "ivfPqTopKIndexed")
     val subDim = meta.d / meta.m
     val coarse = spark.read.schema(CoarseSchema).parquet(s"$path/coarse")

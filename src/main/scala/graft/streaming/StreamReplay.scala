@@ -113,7 +113,7 @@ object StreamReplay {
         // NO-DATA micro-batches off (r17 verdict #4, measured): every
         // processAllAvailable otherwise runs a data batch PLUS a
         // no-data watermark batch, and each batch costs ~1 s of fixed
-        // state-store machinery (Round18StProbe2: triggerExecution
+        // state-store machinery (Round18StProbe2 at commit e960c89: triggerExecution
         // ~1.1 s/batch, commit-dominated — 14 batches for st02's
         // 4-chunk feed). The no-data batches are PURE GC under the
         // replay protocol: every harness feeds TWO trailing sentinel

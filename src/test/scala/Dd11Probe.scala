@@ -8,10 +8,8 @@ package graft
   */
 object Dd11Probe {
   def main(args: Array[String]): Unit = {
-    val spark = GraftSession.builder("local[32]", "dd11probe")
-      .config("spark.sql.shuffle.partitions", "32").getOrCreate()
+    val spark = GraftSession("local[32]", "dd11probe")
     spark.sparkContext.setLogLevel("ERROR")
-    GraftSession.init(spark)
     import org.apache.spark.sql.functions.col
     val sfDir = args.headOption.getOrElse(s"${sys.props("user.dir")}/fixtures/sf1")
     val docs = Tables(spark, sfDir).documents.select("doc_id", "text")

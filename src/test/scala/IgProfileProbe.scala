@@ -8,11 +8,8 @@ import graft.GraftSession
 object IgProfileProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = GraftSession.builder("local[32]", "graft-ig-profile")
-      .config("spark.sql.shuffle.partitions", "32")
-      .getOrCreate()
+    val spark = GraftSession("local[32]", "graft-ig-profile")
     spark.sparkContext.setLogLevel("ERROR")
-    GraftSession.init(spark)
 
     def timed[T](label: String)(f: => T): T = {
       val t0 = System.nanoTime()

@@ -33,11 +33,8 @@ object Sf1Bench {
     val sfDir = args.headOption.getOrElse(s"${sys.props("user.dir")}/fixtures/sf1")
     require(new java.io.File(sfDir, "lineitem.parquet").exists,
       s"$sfDir missing — run `Test/runMain Sf1Gen` first")
-    val spark = GraftSession.builder("local[32]", "graft-sf1bench")
-      .config("spark.sql.shuffle.partitions", "32")
-      .getOrCreate()
+    val spark = GraftSession("local[32]", "graft-sf1bench")
     spark.sparkContext.setLogLevel("ERROR")
-    GraftSession.init(spark)
 
     // Warm-up outside the measurements: file indexes, codegen, and the
     // one-time partsupp fixture derivation at this scale point.

@@ -23,11 +23,8 @@ object Sf1BenchAll {
     val sfDir = args.headOption.getOrElse(s"${sys.props("user.dir")}/fixtures/sf1")
     require(new java.io.File(sfDir, "lineitem.parquet").exists,
       s"$sfDir missing — run `Test/runMain Sf1Gen` first")
-    val spark = GraftSession.builder("local[32]", "graft-sf1benchall")
-      .config("spark.sql.shuffle.partitions", "32")
-      .getOrCreate()
+    val spark = GraftSession("local[32]", "graft-sf1benchall")
     spark.sparkContext.setLogLevel("ERROR")
-    GraftSession.init(spark)
 
     // Optional 2nd arg: comma-separated entry names — measure only those
     // (incremental sf1 rows for entries added after a full run). Unknown

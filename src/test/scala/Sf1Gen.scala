@@ -45,11 +45,7 @@ object Sf1Gen {
   def main(args: Array[String]): Unit = {
     val out = args.headOption.getOrElse(s"${sys.props("user.dir")}/fixtures/sf1")
     val src = "/root/testdata/sf0.1"
-    val spark = GraftSession.builder("local[32]", "sf1-gen")
-      .config("spark.sql.shuffle.partitions", "32")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    GraftSession.init(spark)
+    val spark = GraftSession("local[32]", "sf1-gen")
 
     def read(t: String): DataFrame = spark.read.parquet(s"$src/$t.parquet")
     def write(df: DataFrame, t: String): Unit = {

@@ -35,11 +35,8 @@ object ZorderSf1Probe {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse(s"${sys.props("user.dir")}/fixtures/sf1")
-    val spark = GraftSession.builder("local[32]", "graft-zorder-sf1")
-      .config("spark.sql.shuffle.partitions", "32")
-      .getOrCreate()
+    val spark = GraftSession("local[32]", "graft-zorder-sf1")
     spark.sparkContext.setLogLevel("ERROR")
-    GraftSession.init(spark)
 
     val events = Tables(spark, sfDir).events
       .select("event_id", "user_id", "ts", "event_type", "value")
@@ -97,7 +94,7 @@ object ZorderSf1Probe {
       val bandLo = minT + (maxT - minT) / 2
       val bandHi = bandLo + (maxT - minT) / 16
       def scannedRows(dir: String): Long = {
-        // collect() (as in Round9Probe) so the metrics read from THIS
+        // collect() (as in Round9Probe, commit e960c89) so the metrics read from THIS
         // Dataset's own execution — a sink write runs a separate
         // QueryExecution and would leave these metrics at zero.
         // The band compares the RAW ts column against timestamp

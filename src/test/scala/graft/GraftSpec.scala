@@ -13,4 +13,9 @@ class GraftSpec extends SparkSpec {
     assert(math.abs(sim - 1.0) < 1e-9)
     assert(g.table("region").count() == 5)
   }
+
+  test("the shared local[4] session runs one shuffle partition per core") {
+    assert(spark.sparkContext.defaultParallelism == 4)
+    assert(spark.conf.get("spark.sql.shuffle.partitions") == "4")
+  }
 }

@@ -27,6 +27,11 @@ class QuerySurfaceSpec extends SparkSpec {
     assert(SparkEntry.oracleSql.keySet.subsetOf(SparkEntry.queries.keySet))
   }
 
+  test("every PLANS.md entry of PlanDump --plans-md is a query") {
+    val unknown = graft.PlanDump.PlansMdEntries.toSet -- SparkEntry.queries.keySet
+    assert(unknown.isEmpty, s"PLANS.md entries that are not queries: $unknown")
+  }
+
   test("every query is oracle-checked (rows-only entries must be deliberate)") {
     // If a future query legitimately has no SQL-expressible oracle, list
     // it here explicitly instead of silently weakening the gate.

@@ -42,6 +42,19 @@ class RemoteQueueSourceSpec extends SparkSpec {
     assert(attrs == Map("k" -> "v7"))
   }
 
+  test("the benchmark's stub queue drains through the connector and counts acks") {
+    BenchQueue.reset(50)
+    drain(RemoteIngest.readStream(spark, classOf[BenchQueueFactory].getName, cfg(pollers = 2)),
+      "rq_bench")
+
+    import spark.implicits._
+    assert(spark.table("rq_bench").select("payload").as[String].collect().toSet ==
+      (0 until 50).map(i => s"""{"id": $i, "name": "item-$i", "value": ${i * 1.5}}""").toSet)
+    assert(BenchQueue.backlog == 0 && BenchQueue.deletedCount == 0)
+    assert(AckDispatcher.ackAll(new BenchQueueClient, (0 until 25).map(i => s"bh-$i").iterator) == 25)
+    assert(BenchQueue.deletedCount == 25)
+  }
+
   test("receive error backoff: transient failures are retried, messages still arrive") {
     val s = FakeQueueService.state("backoff")
     (1 to 8).foreach(i => s.enqueue(s"m$i"))

@@ -327,21 +327,31 @@ class StreamReplaySpec extends SparkSpec {
   }
 
   test("replay never mutates the caller's shuffle-partitions conf, even mid-run") {
-    // The 8-partition override must live in the replay's private child
+    // The replay's partition override must live in its private child
     // session (spark.newSession()). A background sampler polls the
-    // CALLER's conf for the whole replay: the old implementation set the
-    // session-global conf and restored it in a finally, so the sampler
-    // would catch "8" mid-run; the isolated form never shows it.
+    // CALLER's conf for the whole replay: an implementation that set the
+    // session-global conf and restored it in a finally would show the
+    // replay's value mid-run; the isolated form never shows it. The
+    // replay's value is pinned to differ from the caller's, or a leak
+    // would be invisible.
     val key = "spark.sql.shuffle.partitions"
     val before = spark.conf.get(key)
+    val replayValue = "2"
+    assert(before != replayValue)
+    spark.conf.set(StreamReplay.ReplayPartitionsConf, replayValue)
     val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     @volatile var stop = false
     val sampler = new Thread(() => {
       while (!stop) { seen.add(spark.conf.get(key)); Thread.sleep(20) }
     })
     sampler.start()
-    try StreamReplay.sessionReplay(spark, tables.events.select("user_id", "event_id", "ts"))
-    finally { stop = true; sampler.join() }
+    try {
+      StreamReplay.sessionReplay(spark, tables.events.select("user_id", "event_id", "ts"))
+      assert(StreamReplay.replaySession(spark).conf.get(key) == replayValue)
+    } finally {
+      stop = true; sampler.join()
+      spark.conf.unset(StreamReplay.ReplayPartitionsConf)
+    }
     assert(spark.conf.get(key) == before)
     val distinct = seen.toArray.toSet
     assert(distinct == Set(before),
