@@ -13,7 +13,9 @@ import scala.jdk.CollectionConverters._
   * This container has no JVM coverage instrumentation available
   * (no scoverage/jacoco jars, offline resolver), so the measurable
   * analog is SPEC-REFERENCE density: for every main source file, how
-  * many test files exercise any of its declared types. A file nobody
+  * many test files exercise any of its declared types. Test files that
+  * declare a `main` entry point (hand-run probes and generators) are not
+  * counted: no test run executes them. A file nobody
   * references is provably untested; the rank surfaces the least-covered
   * files first exactly like coverrank's worst-first listing. The gate —
   * every non-ignored file must be referenced by at least one spec — is
@@ -31,6 +33,11 @@ object CoverRank {
   }
 
   private val TypeDecl = """(?m)^\s*(?:final\s+|abstract\s+|sealed\s+|private[\[\]\w]*\s+)*(?:case\s+)?(?:class|object|trait)\s+([A-Za-z_][A-Za-z0-9_]*)""".r
+  /** A `main` entry point declared at the start of a line, so a string
+    * literal that merely spells one out does not match. */
+  private val MainEntry =
+    """(?m)^\s*(?:override\s+)?def\s+main\s*\(|^\s*(?:case\s+)?object\s+\w+\s+extends\s+App\b""".r
+  private val PackageObjectDecl = """(?m)^\s*package\s+object\s""".r
   private val PackageObjectDef = """(?m)^\s*(?:@\w+\s+)?def\s+([a-z_][A-Za-z0-9_]*)""".r
 
   /** CosineSimilarity -> cosine_similarity: the DSL convention for
@@ -58,15 +65,18 @@ object CoverRank {
     val ignore = loadIgnore(root)
     val mainFiles = walk(root.resolve("src/main/scala"))
       .filterNot(p => ignore.exists(rule => p.toString.contains(rule)))
+    // A standalone `main` under the test root runs only by hand, never in
+    // a test run, so naming a type there covers nothing.
     val testFiles = walk(root.resolve("src/test/scala"))
       .map(p => p -> new String(Files.readAllBytes(p), "UTF-8"))
+      .filterNot { case (_, src) => MainEntry.findFirstIn(src).isDefined }
     mainFiles.map { p =>
       val src = new String(Files.readAllBytes(p), "UTF-8")
       val types = TypeDecl.findAllMatchIn(src).map(_.group(1)).distinct.toSeq
       // package objects declare no rankable type; their surface is the
       // top-level defs (round4, shingles, ...), which specs call by name
       val defNames =
-        if (src.contains("package object"))
+        if (PackageObjectDecl.findFirstIn(src).isDefined)
           PackageObjectDef.findAllMatchIn(src).map(_.group(1)).distinct.toSeq
             .filterNot(Set("apply", "main", "unapply"))
         else Nil
