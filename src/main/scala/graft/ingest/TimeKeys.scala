@@ -48,10 +48,16 @@ import org.apache.spark.sql.types.{DataType, StructType}
   *    their schema can therefore read with another schema than a
   *    whole-sink read.
   *
+  * When no directory in the range exists, it reads the sink's first day
+  * directory in path order with the same filter: that directory holds
+  * the file Spark's non-merging inference picks for the whole tree (the
+  * first data file in path order; a summary file elsewhere in the tree
+  * would take precedence), so the empty result has the whole sink's
+  * schema, and the listing follows one path down the tree.
+  *
   * It falls back to the whole-tree read, `spark.read.parquet(root)` with
-  * the same filter, when no directory in the range exists (an empty
-  * result with the whole sink's schema), when the footer holds no Spark
-  * schema or one naming a partition column, under
+  * the same filter, when the sink holds no day directory, when the
+  * footer holds no Spark schema or one naming a partition column, under
   * `spark.sql.parquet.mergeSchema`, and when a directory the walk lists
   * holds an entry outside the layout: anything but hidden files,
   * `y=dddd`, `m=dd`, `d=dd` directories and the null-key directory
@@ -152,19 +158,22 @@ object TimeKeys {
 
   /** The key-prefix directories under `root` that overlap `[from, to]`:
     * days, or the coarsest level needed to stay within `threshold`
-    * paths. None when none exists, the root is missing, or a listed
-    * directory holds an entry outside the layout. */
+    * paths. When none exists, the first day directory in path order: it
+    * holds the file Spark's non-merging inference picks for the whole
+    * tree, so the empty result has the whole sink's schema. None when
+    * the root is missing, a listed directory holds an entry outside the
+    * layout, or the sink has no day directory. */
   private def prefixDirs(fs: FileSystem, root: Path, from: String, to: String,
                          threshold: Int): Option[Seq[Path]] = {
     // Each directory carries its key prefix, e.g. "202401" for y=2024/m=01.
-    def walk(dirs: Seq[(Path, String)], level: Int): Option[Seq[Path]] =
+    // `pick` chooses among a level's children; Some(Nil) when it chose none.
+    def walk(dirs: Seq[(Path, String)], level: Int)(
+        pick: (Seq[(Path, String)], Int) => Seq[(Path, String)]): Option[Seq[Path]] =
       if (level == KeyLevels.size) Some(dirs.map(_._1))
       else {
         val (column, digits) = KeyLevels(level)
         val Name = s"$column=(\\d{$digits})".r
         val nullKey = s"$column=${ExternalCatalogUtils.DEFAULT_PARTITION_NAME}"
-        val width = KeyLevels.take(level + 1).map(_._2).sum
-        val (lo, hi) = (from.take(width), to.take(width))
         val children = dirs.flatMap { case (dir, prefix) =>
           fs.listStatus(dir).toSeq.filter { s =>
             val name = s.getPath.getName
@@ -183,14 +192,21 @@ object TimeKeys {
         }
         if (children.contains(None)) None
         else {
-          val next = children.flatten.filter { case (_, k) => k >= lo && k <= hi }
-          if (next.isEmpty) None
+          val next = pick(children.flatten, level)
+          if (next.isEmpty) Some(Nil)
           else if (next.size > threshold) Some(dirs.map(_._1))
-          else walk(next, level + 1)
+          else walk(next, level + 1)(pick)
         }
       }
-    try walk(Seq(root -> ""), 0)
-    catch { case _: FileNotFoundException => None }
+    def inRange(children: Seq[(Path, String)], level: Int) = {
+      val width = KeyLevels.take(level + 1).map(_._2).sum
+      children.filter { case (_, k) => k >= from.take(width) && k <= to.take(width) }
+    }
+    def first(children: Seq[(Path, String)], level: Int) = children.sortBy(_._2).take(1)
+    try walk(Seq(root -> ""), 0)(inRange) match {
+      case Some(Nil) => walk(Seq(root -> ""), 0)(first).filter(_.nonEmpty)
+      case dirs => dirs
+    } catch { case _: FileNotFoundException => None }
   }
 
   /** The Spark schema in the footer of the first data file under `dirs`

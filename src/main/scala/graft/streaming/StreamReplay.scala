@@ -169,6 +169,17 @@ object StreamReplay {
     fed.toSeq.map(_.result())
   }
 
+  /** The feed protocol's event-time slack for a replay spanning
+    * `spanMs`: a watermark delay of whole hours over twice the span, so
+    * no displaced row is late-dropped, and a TTL horizon of twice the
+    * span plus an hour, so no key ages out inside the replay. */
+  private final case class Slack(spanMs: Long) {
+    val hours: Long = math.max(1L, 2 * spanMs / 3600000L + 1)
+    val ms: Long = hours * 3600000L
+    val delay: String = s"$hours hours"
+    val horizonMs: Long = 2 * spanMs + 3600000L
+  }
+
   /** Replays `events` (user_id, event_id, ts) through streaming session
     * windows; returns (user_id, session_start, n) matching the batch
     * q29 oracle. */
@@ -180,10 +191,8 @@ object StreamReplay {
       .as[(Long, Long, Timestamp)].collect().sortBy(r => (r._3.getTime, r._2))
 
     val chunks = chunked(rows, nChunks)
-    val spanMs = chunks.map(c => c.last._3.getTime - c.head._3.getTime).max
-    val delayHours = math.max(1L, 2 * spanMs / 3600000L + 1)
+    val slack = Slack(chunks.map(c => c.last._3.getTime - c.head._3.getTime).max)
     val maxTs = rows.last._3.getTime
-    val delayMs = delayHours * 3600000L
     val fed = displaced(chunks)(_._2)
 
     // Each micro-batch pays one state-store round trip PER shuffle
@@ -203,7 +212,7 @@ object StreamReplay {
     val ms = MemoryStream[(Long, Long, Timestamp)]
     val stream = StreamingOps.sessionCounts(
       ms.toDF.toDF("user_id", "event_id", "ts"),
-      tsCol = "ts", keyCol = "user_id", gap = gap, watermark = s"$delayHours hours")
+      tsCol = "ts", keyCol = "user_id", gap = gap, watermark = slack.delay)
 
     val name = s"st_replay_${runSeq.incrementAndGet()}"
     val cp = java.nio.file.Files.createTempDirectory(s"$name-cp").toString
@@ -222,9 +231,9 @@ object StreamReplay {
         }
         // Sentinels: the first advances the watermark past every real
         // session end, the second's batch emits the flushed state.
-        ms.addData(Seq((-1L, -1L, new Timestamp(maxTs + 2 * delayMs))))
+        ms.addData(Seq((-1L, -1L, new Timestamp(maxTs + 2 * slack.ms))))
         q.processAllAvailable()
-        ms.addData(Seq((-1L, -2L, new Timestamp(maxTs + 4 * delayMs))))
+        ms.addData(Seq((-1L, -2L, new Timestamp(maxTs + 4 * slack.ms))))
         q.processAllAvailable()
       } finally q.stop()
       val out = replay.table(name)
@@ -295,10 +304,8 @@ object StreamReplay {
       .as[(Long, Long, Timestamp)].collect().sortBy(r => (r._3.getTime, r._2))
 
     val chunks = chunked(rows, nChunks)
-    val totalSpanMs = rows.last._3.getTime - rows.head._3.getTime
-    val delayHours = math.max(1L, 2 * totalSpanMs / 3600000L + 1)
+    val slack = Slack(rows.last._3.getTime - rows.head._3.getTime)
     val maxTs = rows.last._3.getTime
-    val delayMs = delayHours * 3600000L
     // Same displacement as sessionReplay: a displaced FIRST occurrence
     // must still dedup against its partner that now arrives before it.
     val fed = displaced(chunks)(_._2)
@@ -312,7 +319,7 @@ object StreamReplay {
     val stream = StreamingOps.dedupWithinWatermark(
       ms.toDF.toDF("user_id", "event_id", "ts")
         .withColumn("hour_bucket", date_trunc("hour", col("ts"))),
-      tsCol = "ts", watermark = s"$delayHours hours",
+      tsCol = "ts", watermark = slack.delay,
       keys = Seq("user_id", "hour_bucket"))
 
     val name = s"st_ddreplay_${runSeq.incrementAndGet()}"
@@ -335,7 +342,7 @@ object StreamReplay {
         // must therefore still dedup; an implementation that evicted
         // on the advance would re-admit it and the extra row would
         // break the batch-DISTINCT oracle equality.
-        ms.addData(Seq((-1L, -3L, new Timestamp(maxTs + delayMs / 2))))
+        ms.addData(Seq((-1L, -3L, new Timestamp(maxTs + slack.ms / 2))))
         q.processAllAvailable()
         ms.addData(Seq(rows.head))
         q.processAllAvailable()
@@ -343,9 +350,9 @@ object StreamReplay {
         // eviction bound and run full state-GC rounds before the drain
         // (state-cleanup machinery, not a re-admission gate — nothing
         // real is fed after them).
-        ms.addData(Seq((-1L, -1L, new Timestamp(maxTs + 2 * delayMs))))
+        ms.addData(Seq((-1L, -1L, new Timestamp(maxTs + 2 * slack.ms))))
         q.processAllAvailable()
-        ms.addData(Seq((-1L, -2L, new Timestamp(maxTs + 4 * delayMs))))
+        ms.addData(Seq((-1L, -2L, new Timestamp(maxTs + 4 * slack.ms))))
         q.processAllAvailable()
       } finally q.stop()
       val out = replay.table(name)
@@ -883,10 +890,8 @@ object StreamReplay {
       .as[(Long, Long, Timestamp)].collect().sortBy(r => (r._3.getTime, r._2))
 
     val chunks = chunked(rows, nChunks)
-    val spanMs = chunks.map(c => c.last._3.getTime - c.head._3.getTime).max
-    val delayHours = math.max(1L, 2 * spanMs / 3600000L + 1)
+    val slack = Slack(chunks.map(c => c.last._3.getTime - c.head._3.getTime).max)
     val maxTs = rows.last._3.getTime
-    val delayMs = delayHours * 3600000L
     // Same displacement as sessionReplay: the late subset lands one
     // chunk forward, on whichever stream its parity routes it to.
     val fed = displaced(chunks)(_._2)
@@ -904,7 +909,7 @@ object StreamReplay {
       msL.toDF.toDF("user_id", "l_event", "lts"),
       msR.toDF.toDF("user_id", "r_event", "rts"),
       key = "user_id", leftTs = "lts", rightTs = "rts",
-      band = band, watermark = s"$delayHours hours", joinType = joinType)
+      band = band, watermark = slack.delay, joinType = joinType)
 
     val name = s"st_ijreplay_${runSeq.incrementAndGet()}"
     val cp = java.nio.file.Files.createTempDirectory(s"$name-cp").toString
@@ -923,11 +928,11 @@ object StreamReplay {
         // Sentinels on BOTH streams (the join's watermark is the min of
         // the two): distinct negative keys so they can never join each
         // other, two rounds so eviction is exercised before the drain.
-        msL.addData(Seq((-1L, -2L, new Timestamp(maxTs + 2 * delayMs))))
-        msR.addData(Seq((-3L, -1L, new Timestamp(maxTs + 2 * delayMs))))
+        msL.addData(Seq((-1L, -2L, new Timestamp(maxTs + 2 * slack.ms))))
+        msR.addData(Seq((-3L, -1L, new Timestamp(maxTs + 2 * slack.ms))))
         q.processAllAvailable()
-        msL.addData(Seq((-1L, -4L, new Timestamp(maxTs + 4 * delayMs))))
-        msR.addData(Seq((-3L, -3L, new Timestamp(maxTs + 4 * delayMs))))
+        msL.addData(Seq((-1L, -4L, new Timestamp(maxTs + 4 * slack.ms))))
+        msR.addData(Seq((-3L, -3L, new Timestamp(maxTs + 4 * slack.ms))))
         q.processAllAvailable()
       } finally q.stop()
       val out = replay.table(name)
@@ -1001,15 +1006,13 @@ object StreamReplay {
       .map(_.map(r => (r._1, r._2, idx.getOrElse(r._3, -1),
         new Timestamp(r._2 / 1000))))
 
-    val spanMs = (rows.last._2 - rows.head._2) / 1000
-    val horizonMs = 2 * spanMs + 3600000L
-    val delayHours = math.max(1L, 2 * spanMs / 3600000L + 1)
+    val slack = Slack((rows.last._2 - rows.head._2) / 1000)
 
     val replay = replaySession(spark)
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = replay.sqlContext
     val ms = MemoryStream[(Long, Long, Int, Timestamp)]
     val staged = StatefulOps.funnelStreamTtl(ms.toDS(), stages.length,
-      delayThreshold = s"$delayHours hours", horizonMs = horizonMs)
+      delayThreshold = slack.delay, horizonMs = slack.horizonMs)
     runFunnelCapture(spark, staged,
       fed.filter(_.nonEmpty).map(b => () => { ms.addData(b); () }))
   }
@@ -1038,15 +1041,13 @@ object StreamReplay {
       .as[(Long, Long, Long, String)].collect().sortBy(r => (r._3, r._2))
     val fed = displaced(chunked(rows, nChunks))(_._2)
       .map(_.map(r => (r._1, r._2, r._3, r._4, new Timestamp(r._3 * 86400000L))))
-    val spanMs = (rows.last._3 - rows.head._3) * 86400000L
-    val horizonMs = 2 * spanMs + 3600000L
-    val delayHours = math.max(1L, 2 * spanMs / 3600000L + 1)
+    val slack = Slack((rows.last._3 - rows.head._3) * 86400000L)
 
     val replay = replaySession(spark)
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = replay.sqlContext
     val ms = MemoryStream[(Long, Long, Long, String, Timestamp)]
     val timeline = StatefulOps.scd2StreamTtl(ms.toDS(),
-      delayThreshold = s"$delayHours hours", horizonMs = horizonMs)
+      delayThreshold = slack.delay, horizonMs = slack.horizonMs)
 
     val captured =
       scala.collection.mutable.ArrayBuffer.empty[(Long, Seq[(Long, Long, Long, String, Long, Boolean)])]
@@ -1177,16 +1178,14 @@ object StreamReplay {
       .as[(Long, Long, Long, Long)].collect().sortBy(r => (r._4, r._2))
     val fed = chunked(rows, nChunks)
       .map(_.toSeq.map(r => (r._1, r._2, r._3, new Timestamp(r._4 / 1000))))
-    val spanMs = (rows.last._4 - rows.head._4) / 1000
-    val horizonMs = 2 * spanMs + 3600000L
-    val delayHours = math.max(1L, 2 * spanMs / 3600000L + 1)
+    val slack = Slack((rows.last._4 - rows.head._4) / 1000)
 
     val replay = replaySession(spark)
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = replay.sqlContext
     val ms = MemoryStream[(Long, Long, Long, Timestamp)]
     val flagged = StatefulOps.rollingZscoreStreamTtl(ms.toDS(),
       window, minBaseline, threshold,
-      delayThreshold = s"$delayHours hours", horizonMs = horizonMs)
+      delayThreshold = slack.delay, horizonMs = slack.horizonMs)
 
     val name = s"st_zsreplay_${runSeq.incrementAndGet()}"
     val cp = java.nio.file.Files.createTempDirectory(s"$name-cp").toString

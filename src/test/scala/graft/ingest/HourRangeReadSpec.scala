@@ -80,7 +80,7 @@ class HourRangeReadSpec extends SparkSpec {
     val root = sinkOf(Seq("2024-03-01 08", "2024-03-02 01"))
     for ((from, to) <- Seq("2025-01-01 00" -> "2025-01-01 05", "2024-03-03 00" -> "2024-03-03 23")) {
       val got = TimeKeys.readHourRange(spark, root, from, to)
-      assert(readPaths(got, root) == Seq(""))
+      assert(readPaths(got, root) == Seq("y=2024/m=03/d=01"))
       assert(got.schema == wholeTree(spark, root, from, to).schema)
       assert(got.schema.fieldNames.toSeq == Seq("id", "ts", "y", "m", "d", "h"))
       assert(got.count() == 0)
@@ -250,6 +250,17 @@ class HourRangeReadSpec extends SparkSpec {
     assert(paths.forall(p => Set("", "y=2024", "y=2024/m=02")(p) || rangeDays.exists(p.startsWith)), paths)
     assert(paths.size <= 3 + rangeDays.size * 25 + 2, s"${paths.size} listings: $paths")
     assert(got.count() == 4)
+
+    // An empty range: the walk lists the root, then the root, first year
+    // and first month again down to the first day, which Spark lists with
+    // its hours and the footer choice with its first hour.
+    listed.clear()
+    var empty: DataFrame = null
+    assert(jobsDuring { empty = TimeKeys.readHourRange(counted, root, "2025-01-01 00", "2025-01-01 05") } == 0)
+    val emptyPaths = listed.asScala.toSeq.map(_.stripPrefix(root).stripPrefix("/"))
+    assert(emptyPaths.forall(p => Set("", "y=2024", "y=2024/m=01")(p) || p.startsWith("y=2024/m=01/d=01")), emptyPaths)
+    assert(emptyPaths.size <= 4 + 25 + 2, s"${emptyPaths.size} listings: $emptyPaths")
+    assert(empty.count() == 0)
 
     // The whole-tree read lists all 60 days' hours and infers the schema in a job.
     listed.clear()

@@ -263,35 +263,46 @@ class StatefulTtlSpec extends SparkSpec {
   }
 
   test("lshCandidateStreamTtl evicts aged buckets and never pairs across the horizon") {
-    for ((label, prov) <- providers) withProvider(prov) {
+    // Two inputs, the lsh rows and the dhash rows: bucket k is (0, "k")
+    // or (0, 5), bucket z is (0, "z") or (0, 9); every dhash in a bucket
+    // is within Hamming 1 of the others, so each shared-bucket pair
+    // verifies and the two operators must give the same pairs.
+    for ((label, prov) <- providers; op <- Seq("lsh", "dhash")) withProvider(prov) {
       implicit val ctx = spark.sqlContext
-      val ms = MemoryStream[(Int, String, Long, Timestamp)]
-      val name = s"ttl_lsh_ev_${label}_${System.nanoTime()}"
-      val q = StatefulOps.lshCandidateStreamTtl(ms.toDS(),
-          delayThreshold = "0 seconds", horizonMs = 60L * 1000)
-        .toDF("doc_a", "doc_b")
+      val lsh = MemoryStream[(Int, String, Long, Timestamp)]
+      val dh = MemoryStream[(Int, Long, Long, Long, Timestamp)]
+      val name = s"ttl_${op}_ev_${label}_${System.nanoTime()}"
+      val pairsDf =
+        if (op == "lsh") StatefulOps.lshCandidateStreamTtl(lsh.toDS(),
+          delayThreshold = "0 seconds", horizonMs = 60L * 1000).toDF("doc_a", "doc_b")
+        else StatefulOps.dhashDedupStreamTtl(dh.toDS(), maxHamming = 1,
+          delayThreshold = "0 seconds", horizonMs = 60L * 1000).toDF("doc_a", "doc_b", "hamming")
+      def add(bucket: String, doc: Long, ms: Long): Unit =
+        if (op == "lsh") lsh.addData((0, bucket, doc, new Timestamp(ms)))
+        else dh.addData((0, if (bucket == "k") 5L else 9L, doc, doc % 2, new Timestamp(ms)))
+      val q = pairsDf.select("doc_a", "doc_b")
         .writeStream.outputMode("append").format("memory").queryName(name).start()
       try {
         // batch 1: doc 1 lands in bucket k at t=10s (timeout arms at 70s)
-        ms.addData((0, "k", 1L, new Timestamp(10000L)))
+        add("k", 1L, 10000L)
         q.processAllAvailable()
         // batch 2: far-future doc in bucket z -> watermark passes 70s
-        ms.addData((0, "z", 9L, new Timestamp(10000000L)))
+        add("z", 9L, 10000000L)
         q.processAllAvailable()
         // batch 3: touch only bucket z -> bucket k times out and is removed
-        ms.addData((0, "z", 10L, new Timestamp(10001000L)))
+        add("z", 10L, 10001000L)
         q.processAllAvailable()
         val counts = stateRowCounts(q)
-        assert(counts.max == 2, s"[$label] expected buckets k+z in state at peak: $counts")
-        assert(counts.last == 1, s"[$label] expected bucket k evicted (z left): $counts")
+        assert(counts.max == 2, s"[$label/$op] expected buckets k+z in state at peak: $counts")
+        assert(counts.last == 1, s"[$label/$op] expected bucket k evicted (z left): $counts")
         // batch 4: doc 2 re-opens bucket k AFTER eviction -> it must
         // NOT pair with the aged-out doc 1 (fresh-window semantics)
-        ms.addData((0, "k", 2L, new Timestamp(10002000L)))
+        add("k", 2L, 10002000L)
         q.processAllAvailable()
         val pairs = spark.table(name).as[(Long, Long)].collect().toSet
         assert(!pairs.contains((1L, 2L)),
-          s"[$label] pair across the evicted horizon must not exist: $pairs")
-        assert(pairs == Set((9L, 10L)), s"[$label] only the z-bucket pair expected: $pairs")
+          s"[$label/$op] pair across the evicted horizon must not exist: $pairs")
+        assert(pairs == Set((9L, 10L)), s"[$label/$op] only the z-bucket pair expected: $pairs")
       } finally q.stop()
     }
   }
