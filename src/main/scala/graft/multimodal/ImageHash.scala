@@ -399,10 +399,47 @@ object ImageHash {
   // by the band bucket so the nightly candidate join reads the index
   // side with ZERO exchange whatever its size), and each new batch is
   // hashed, banded, and joined against it — the recurring cost is the
-  // NEW batch alone. Like the dd11 band index (and unlike the
-  // PQ/semantic/inverted indexes), the sidecar carries only the
-  // banding PARAMETERS — there are no incrementally-maintained stats
-  // to go stale — so the loud checks are the param/foreign-dir ones.
+  // NEW batch alone. The sidecar carries the banding PARAMETERS and,
+  // since format v2, the [[graft.operators.IndexWitness]] fingerprint
+  // of the data files, so an append or compaction that crashed after
+  // its file commit is refused as stale, as in every persisted index.
+
+  /** dHash index sidecar format: v2 added the [[graft.operators.IndexWitness]]
+    * fingerprint + append lifecycle (r19 directive #1; shared by the
+    * clip- and frame-level indexes and, via delegation, the audio
+    * family). */
+  val DhashIndexFormatVersion = 2
+
+  /** The clip-level sidecar: `dhashNBands` beside the path-table
+    * bucket spec. A frame index's sidecar carries `dhashFrameIndex` so
+    * the two shapes refuse each other. */
+  private val ClipSidecar = new graft.operators.PersistedIndex[Int]("dHash band",
+      DhashIndexFormatVersion, "ImageHash.saveDhashIndex or AudioHash.saveAfpIndex",
+      graft.operators.PersistedIndex.PathTable())(
+    nBands => Seq("dhashNBands" -> nBands),
+    f => {
+      require(!f.props.get("dhashFrameIndex").contains("true"),
+        s"${f.root} is a FRAME-level band index (saveFrameIndex) — its rows are " +
+          "per-position hashes, not per-clip; query it with " +
+          "incrementalNearDupPairsOffset, not the clip-level incremental join")
+      f.int("dhashNBands")
+    })
+
+  /** The frame-level sidecar lives in `bands/`, but its fingerprint
+    * covers the whole index root — bands/ AND counts/ — so a crash
+    * between the two writes of a build or an append is the loud
+    * witness-stale state instead of a silently count-less index. */
+  private val FrameSidecar = new graft.operators.PersistedIndex[Int]("frame band",
+      DhashIndexFormatVersion, "ImageHash.saveFrameIndex or AudioHash.saveSegmentIndex",
+      graft.operators.PersistedIndex.PathTable("bands"))(
+    nBands => Seq("dhashNBands" -> nBands, "dhashFrameIndex" -> true),
+    f => {
+      val nBands = f.int("dhashNBands")
+      require(f.props.get("dhashFrameIndex").contains("true"),
+        s"${f.root}/bands is a CLIP-level band index — query it with the " +
+          "clip-level incremental join, not the offset sweep")
+      nBands
+    })
 
   /** Write the banded projection of `hashes` (id, dhash) to `path` as
     * a bucketed path table. `nBands` is fixed at save time (it IS the
@@ -410,57 +447,17 @@ object ImageHash {
     * caller-side mismatch cannot exist. The width cap runs at save
     * time: an over-wide bucket would make every future incremental
     * query quadratic, so it dies here, named, instead. */
-  /** dHash index sidecar format: v2 added the [[graft.operators.IndexWitness]]
-    * fingerprint + append lifecycle (r19 directive #1; shared by the
-    * clip- and frame-level indexes and, via delegation, the audio
-    * family). */
-  val DhashIndexFormatVersion = 2
-
-  /** Witness + meta re-bless shared by the save/append/compact steps of
-    * BOTH index shapes: caller props plus the CURRENT data fingerprint
-    * of `fpRoot` (the clip index's own dir; the frame index's PARENT,
-    * covering bands/ and counts/ together so a crash between the two
-    * appends is loud), published last. */
-  private def blessDhashIndex(sidecarPath: String, fpRoot: String,
-                              props: Map[String, String]): Unit =
-    graft.operators.Layout.rewritePathTableProps(sidecarPath,
-      props + ("formatVersion" -> DhashIndexFormatVersion.toString,
-        "dataFp" -> graft.operators.IndexWitness.fingerprint(fpRoot)))
-
-  /** Loud staleness check — the two-crash-window adjudication (fires
-    * only post-commit, where a re-run would refuse the same state). */
-  private def checkDhashWitness(sidecarPath: String, fpRoot: String,
-                                who: String): Unit = {
-    val fp = graft.operators.Layout.pathTableProps(sidecarPath)
-      .flatMap(_.get("dataFp")).getOrElse(sys.error(
-        s"$sidecarPath has no dataFp in its sidecar — the build crashed " +
-          "before the witness bless; rebuild the index"))
-    graft.operators.IndexWitness.check(fpRoot, fp,
-      s"$who found a stale index: data files changed without their meta (an " +
-        "append or compaction crashed after its file commit, before the meta " +
-        "re-bless)",
-      "re-running the append/compaction would refuse this same state — " +
-        "rebuild the index to re-bless it")
-  }
-
-  private def requireIndexFormat(path: String,
-                                 props: Map[String, String]): Unit = {
-    val pj = new java.util.Properties()
-    props.foreach { case (k, v) => pj.setProperty(k, v) }
-    graft.operators.IndexWitness.requireFormat(s"$path (dHash index sidecar)",
-      pj, DhashIndexFormatVersion, "rebuild the index with its save function")
-  }
-
   def saveDhashIndex(hashes: DataFrame, path: String, nBands: Int = 4,
                      nBuckets: Int = 8, maxBandBucket: Int = 1000000): Unit = {
     require(nBands >= 2 && 64 % nBands == 0,
       s"nBands must divide 64 and be >= 2, got $nBands")
     val rows = bandGuarded(bandRows(hashes, nBands), maxBandBucket, "saveDhashIndex")
       .withColumn("bucket", concat_ws("#", col("band"), col("bv")))
-    graft.operators.Layout.saveBucketedPath(rows, path, "bucket", nBuckets,
-      extraProps = Map("dhashNBands" -> nBands.toString,
-        "formatVersion" -> DhashIndexFormatVersion.toString))
-    blessDhashIndex(path, path, Map("dhashNBands" -> nBands.toString))
+    ClipSidecar.build(path) {
+      graft.operators.Layout.saveBucketedPath(rows, path, "bucket", nBuckets,
+        ClipSidecar.unblessed)
+      nBands
+    }
   }
 
   /** Append a batch's band rows into a [[saveDhashIndex]] corpus — the
@@ -473,15 +470,14 @@ object ImageHash {
     * before it lands). Contract: ids new to the index — survivors of
     * the batch dedup (the appendToSemanticIndex contract). */
   def appendToDhashIndex(newHashes: DataFrame, indexPath: String,
-                         maxBandBucket: Int = 1000000): Unit = {
-    val nBands = readIndexMeta(indexPath)
-    checkDhashWitness(indexPath, indexPath, "appendToDhashIndex")
-    val rows = bandGuarded(bandRows(newHashes, nBands), maxBandBucket,
-        "appendToDhashIndex")
-      .withColumn("bucket", concat_ws("#", col("band"), col("bv")))
-    graft.operators.Layout.appendBucketedPath(rows, indexPath)
-    blessDhashIndex(indexPath, indexPath, Map("dhashNBands" -> nBands.toString))
-  }
+                         maxBandBucket: Int = 1000000): Unit =
+    ClipSidecar.maintain(indexPath, "appendToDhashIndex") { nBands =>
+      val rows = bandGuarded(bandRows(newHashes, nBands), maxBandBucket,
+          "appendToDhashIndex")
+        .withColumn("bucket", concat_ws("#", col("band"), col("bv")))
+      graft.operators.Layout.appendBucketedPath(rows, indexPath)
+      ((), Some(nBands))
+    }
 
   /** Compact the per-night small files [[appendToDhashIndex]] accretes
     * (r19 directive #2): witness first, one file per bucket through the
@@ -491,29 +487,12 @@ object ImageHash {
   def compactDhashIndex(spark: org.apache.spark.sql.SparkSession,
                         indexPath: String,
                         targetFileBytes: Long = 128L * 1024 * 1024)
-      : graft.ingest.Compaction.CompactionStats = {
-    val nBands = readIndexMeta(indexPath)
-    checkDhashWitness(indexPath, indexPath, "compactDhashIndex")
-    val stats = graft.operators.Layout.compactBucketedPath(spark, indexPath,
-      targetFileBytes)
-    if (stats.compacted)
-      blessDhashIndex(indexPath, indexPath, Map("dhashNBands" -> nBands.toString))
-    stats
-  }
-
-  private def readIndexMeta(path: String): Int = {
-    val props = graft.operators.Layout.pathTableProps(path).getOrElse(sys.error(
-      s"$path has no path-table metadata — not a graft dHash band index; " +
-        "rebuild with ImageHash.saveDhashIndex"))
-    requireIndexFormat(path, props)
-    require(!props.get("dhashFrameIndex").contains("true"),
-      s"$path is a FRAME-level band index (saveFrameIndex) — its rows are " +
-        "per-position hashes, not per-clip; query it with " +
-        "incrementalNearDupPairsOffset, not the clip-level incremental join")
-    props.getOrElse("dhashNBands", sys.error(
-      s"$path is a bucketed path table but not a dHash band index " +
-        "(no dhashNBands property) — refusing to misread a foreign index")).toInt
-  }
+      : graft.ingest.Compaction.CompactionStats =
+    ClipSidecar.maintain(indexPath, "compactDhashIndex") { nBands =>
+      val stats = graft.operators.Layout.compactBucketedPath(spark, indexPath,
+        targetFileBytes)
+      (stats, Option.when(stats.compacted)(nBands))
+    }
 
   /** Near-dup pairs INVOLVING a new batch of hashes, against a
     * [[saveDhashIndex]] corpus: (indexed x new) band collisions plus
@@ -524,8 +503,7 @@ object ImageHash {
   def incrementalNearDupPairs(newHashes: DataFrame, indexPath: String,
                               maxHamming: Int,
                               maxBandBucket: Int = 1000000): DataFrame = {
-    val nBands = readIndexMeta(indexPath)
-    checkDhashWitness(indexPath, indexPath, "incrementalNearDupPairs")
+    val nBands = ClipSidecar.verify(indexPath, "incrementalNearDupPairs")
     requireRecall(maxHamming, nBands)
     val idx = graft.operators.Layout.loadBucketedPath(
       newHashes.sparkSession, indexPath)._1
@@ -567,9 +545,8 @@ object ImageHash {
   // because the offset sweep's fraction gate needs the LONGER side's
   // length and counting it from the index per query would re-scan the
   // corpus nightly. Sidecar marker `dhashFrameIndex` keeps the clip-
-  // and frame-level indexes from misreading each other. Save-once like
-  // the clip index (params + counts, written counts-last so a crash
-  // mid-build fails loudly on the missing table).
+  // and frame-level indexes from misreading each other; the sidecar
+  // lifecycle is the shared [[graft.operators.PersistedIndex]] one.
 
   /** Write the per-position banded projection + per-id frame counts of
     * `frames` (id, frame_idx, dhash) to `path`. The per-position width
@@ -591,21 +568,17 @@ object ImageHash {
     // themselves (each frame contributes exactly nBands band rows) —
     // the same count(*)/nBands denominator the query paths use.
     val eager = graft.operators.TextDedup.eagerMode(frames.sparkSession)
-    if (eager) rows.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      graft.operators.Layout.saveBucketedPath(rows, s"$path/bands", "bucket",
-        nBuckets, extraProps = Map("dhashNBands" -> nBands.toString,
-          "dhashFrameIndex" -> "true",
-          "formatVersion" -> DhashIndexFormatVersion.toString))
-      rows.groupBy(col("id"))
-        .agg((count(lit(1)) / nBands).cast("long").as("n_frames"))
-        .coalesce(1).write.mode("overwrite").parquet(s"$path/counts")
-    } finally if (eager) rows.unpersist()
-    // fingerprint covers bands/ AND counts/ (the parent): a crash
-    // between the two writes, or between an append's two halves, is the
-    // loud witness-stale state instead of a silently count-less index
-    blessDhashIndex(s"$path/bands", path, Map("dhashNBands" -> nBands.toString,
-      "dhashFrameIndex" -> "true"))
+    FrameSidecar.build(path) {
+      if (eager) rows.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      try {
+        graft.operators.Layout.saveBucketedPath(rows, s"$path/bands", "bucket",
+          nBuckets, FrameSidecar.unblessed)
+        rows.groupBy(col("id"))
+          .agg((count(lit(1)) / nBands).cast("long").as("n_frames"))
+          .coalesce(1).write.mode("overwrite").parquet(s"$path/counts")
+      } finally if (eager) rows.unpersist()
+      nBands
+    }
   }
 
   /** Append a batch's position-band rows + per-id frame counts into a
@@ -620,24 +593,23 @@ object ImageHash {
     * witness-stale state, never a bands/counts mismatch the fraction
     * gate would silently mis-evaluate. */
   def appendToFrameIndex(newFrames: DataFrame, indexPath: String,
-                         maxBandBucket: Int = 1000000): Unit = {
-    val spark = newFrames.sparkSession
-    val (_, _, nBands) = loadFrameIndex(spark, indexPath) // format+witness+counts checks
-    val rows = frameBandGuarded(
-        bandRows(newFrames.select("id", "frame_idx", "dhash"), nBands),
-        maxBandBucket, "appendToFrameIndex")
-      .withColumn("bucket", concat_ws("#", col("band"), col("bv")))
-    val eager = graft.operators.TextDedup.eagerMode(spark)
-    if (eager) rows.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      graft.operators.Layout.appendBucketedPath(rows, s"$indexPath/bands")
-      rows.groupBy(col("id"))
-        .agg((count(lit(1)) / nBands).cast("long").as("n_frames"))
-        .coalesce(1).write.mode("append").parquet(s"$indexPath/counts")
-    } finally if (eager) rows.unpersist()
-    blessDhashIndex(s"$indexPath/bands", indexPath,
-      Map("dhashNBands" -> nBands.toString, "dhashFrameIndex" -> "true"))
-  }
+                         maxBandBucket: Int = 1000000): Unit =
+    FrameSidecar.maintain(indexPath, "appendToFrameIndex") { nBands =>
+      val spark = newFrames.sparkSession
+      val rows = frameBandGuarded(
+          bandRows(newFrames.select("id", "frame_idx", "dhash"), nBands),
+          maxBandBucket, "appendToFrameIndex")
+        .withColumn("bucket", concat_ws("#", col("band"), col("bv")))
+      val eager = graft.operators.TextDedup.eagerMode(spark)
+      if (eager) rows.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      try {
+        graft.operators.Layout.appendBucketedPath(rows, s"$indexPath/bands")
+        rows.groupBy(col("id"))
+          .agg((count(lit(1)) / nBands).cast("long").as("n_frames"))
+          .coalesce(1).write.mode("append").parquet(s"$indexPath/counts")
+      } finally if (eager) rows.unpersist()
+      ((), Some(nBands))
+    }
 
   /** Compact both tables of a [[saveFrameIndex]] corpus after nightly
     * appends (r19 directive #2): bands through the BUCKETED writer,
@@ -646,37 +618,22 @@ object ImageHash {
   def compactFrameIndex(spark: org.apache.spark.sql.SparkSession,
                         indexPath: String,
                         targetFileBytes: Long = 128L * 1024 * 1024)
-      : Seq[graft.ingest.Compaction.CompactionStats] = {
-    val (_, _, nBands) = loadFrameIndex(spark, indexPath)
-    val bandStats = graft.operators.Layout.compactBucketedPath(
-      spark, s"$indexPath/bands", targetFileBytes)
-    val countStats = graft.ingest.Compaction.compactLeaf(
-      spark, s"$indexPath/counts", targetFileBytes)
-    if (bandStats.compacted || countStats.compacted)
-      blessDhashIndex(s"$indexPath/bands", indexPath,
-        Map("dhashNBands" -> nBands.toString, "dhashFrameIndex" -> "true"))
-    Seq(bandStats, countStats)
-  }
+      : Seq[graft.ingest.Compaction.CompactionStats] =
+    FrameSidecar.maintain(indexPath, "compactFrameIndex") { nBands =>
+      val bandStats = graft.operators.Layout.compactBucketedPath(
+        spark, s"$indexPath/bands", targetFileBytes)
+      val countStats = graft.ingest.Compaction.compactLeaf(
+        spark, s"$indexPath/counts", targetFileBytes)
+      (Seq(bandStats, countStats),
+        Option.when(bandStats.compacted || countStats.compacted)(nBands))
+    }
 
   /** Open a [[saveFrameIndex]] directory: (bands, counts, nBands) —
     * package-visible for the streaming twin (st20), which joins the
     * stream side against the static bands table. */
   private[graft] def loadFrameIndex(spark: org.apache.spark.sql.SparkSession,
                                     path: String): (DataFrame, DataFrame, Int) = {
-    val props = graft.operators.Layout.pathTableProps(s"$path/bands")
-      .getOrElse(sys.error(
-        s"$path has no bands/ path-table metadata — not a graft frame band " +
-          "index; rebuild with saveFrameIndex"))
-    requireIndexFormat(s"$path/bands", props)
-    require(props.get("dhashFrameIndex").contains("true"),
-      s"$path/bands is a CLIP-level band index — query it with the " +
-        "clip-level incremental join, not the offset sweep")
-    val nBands = props.getOrElse("dhashNBands", sys.error(
-      s"$path/bands has no dhashNBands property — foreign index")).toInt
-    require(graft.operators.MetaIO.exists(s"$path/counts"),
-      s"$path has no counts/ table — the build crashed between the bands and " +
-        "counts writes; rebuild with saveFrameIndex")
-    checkDhashWitness(s"$path/bands", path, "loadFrameIndex")
+    val nBands = FrameSidecar.verify(path, "loadFrameIndex")
     val bands = graft.operators.Layout.loadBucketedPath(spark, s"$path/bands")._1
     (bands, spark.read.parquet(s"$path/counts"), nBands)
   }

@@ -36,9 +36,6 @@ import graft.functions.tokens
   */
 object InvertedIndex {
 
-  // Underscore prefix: hidden from parquet directory listings.
-  private val MetaFile = "_graft_inverted_index.properties"
-
   /** crc32(term) mod nBuckets — the Spark column form; MUST stay in
     * lockstep with [[termBucketLocal]] (spec-pinned equality). */
   private def termBucket(term: Column, nBuckets: Int): Column =
@@ -56,10 +53,10 @@ object InvertedIndex {
     * `docCount`/`totalTokens` count docs WITH at least one token — the
     * same universe the postings (and any tokenize-side oracle) see.
     * `postingRows` pins the exact posting row count the stats were
-    * computed over — the consistency witness that makes a stale meta
-    * (crash between a parquet append and the meta write) DETECTABLE
-    * instead of silently mis-scoring BM25: [[appendToIndex]] and
-    * [[verifyIndex]] compare it against the index and fail loudly. */
+    * computed over; `dataFp` is the [[IndexWitness]] fingerprint that
+    * makes a stale meta (crash between a parquet append and the meta
+    * write) DETECTABLE instead of silently mis-scoring BM25:
+    * [[appendToIndex]] and [[verifyIndex]] check it and fail loudly. */
   final case class IndexMeta(nBuckets: Int, docCount: Long, totalTokens: Long,
                              postingRows: Long, dataFp: String)
 
@@ -75,47 +72,14 @@ object InvertedIndex {
         org.apache.spark.sql.expressions.Window.partitionBy("doc_id")).cast("int"))
       .select("term", "doc_id", "tf", "dl")
 
-  /** Temp-file + atomic rename: a reader never observes a torn or
-    * half-written properties file — the meta either IS the previous
-    * consistent version or the new one. (The append→meta gap itself is
-    * covered by `postingRows`, checked in [[appendToIndex]] /
-    * [[verifyIndex]].) */
-  /** Meta format version, bumped on every backward-incompatible sidecar
-    * change so an old index fails with a NAMED upgrade message, not a
-    * generic missing-property error (r17 advisory). v2 = the dataFp
-    * file-listing witness replaced the per-query posting count. */
-  private val MetaFormatVersion = 2
-
-  private def writeMeta(path: String, meta: IndexMeta): Unit = {
-    val p = new java.util.Properties()
-    p.setProperty("formatVersion", MetaFormatVersion.toString)
-    p.setProperty("nBuckets", meta.nBuckets.toString)
-    p.setProperty("docCount", meta.docCount.toString)
-    p.setProperty("totalTokens", meta.totalTokens.toString)
-    p.setProperty("postingRows", meta.postingRows.toString)
-    p.setProperty("dataFp", meta.dataFp)
-    MetaIO.writePropsAtomic(path, MetaFile, p, "graft inverted index")
-  }
-
-  private def readMeta(path: String, hint: String): IndexMeta = {
-    val pOpt = MetaIO.readProps(s"$path/${MetaFile}")
-    require(pOpt.isDefined,
-      s"$path has no $MetaFile — not a graft inverted index; $hint")
-    val p = pOpt.get
-    // format check first, BOTH directions (r18 advisory: the version
-    // was written but never read back, so a newer-format index would be
-    // silently misread): old/absent → NAMED upgrade message; newer →
-    // upgrade-the-engine message
-    IndexWitness.requireFormat(s"$path/$MetaFile", p, MetaFormatVersion, hint)
-    def prop(k: String): String = {
-      val v = p.getProperty(k)
-      require(v != null, s"$path/$MetaFile is missing '$k' — corrupt or " +
-        s"pre-postingRows meta; $hint")
-      v
-    }
-    IndexMeta(prop("nBuckets").toInt, prop("docCount").toLong,
-      prop("totalTokens").toLong, prop("postingRows").toLong, prop("dataFp"))
-  }
+  /** The index sidecar. v2 = the dataFp file-listing witness replaced
+    * the per-query posting count. */
+  private val Sidecar = new PersistedIndex[IndexMeta]("inverted", 2, "saveIndex",
+      PersistedIndex.PropsFile("_graft_inverted_index.properties", "graft inverted index"))(
+    m => Seq("nBuckets" -> m.nBuckets, "docCount" -> m.docCount,
+      "totalTokens" -> m.totalTokens, "postingRows" -> m.postingRows),
+    f => IndexMeta(f.int("nBuckets"), f.long("docCount"), f.long("totalTokens"),
+      f.long("postingRows"), f.dataFp))
 
   /** Loud stats-consistency check: the meta's [[IndexWitness]]
     * file-listing fingerprint vs the directory's current listing — a
@@ -123,21 +87,12 @@ object InvertedIndex {
     * advisory; the previous form counted the whole posting table). A
     * mismatch means a crash landed between a parquet append and its
     * meta write, so docCount/totalTokens are stale and BM25 would
-    * silently mis-score — rebuild or re-run the append.
-    * [[appendToIndex]] runs this automatically before every append
-    * (stale stats cannot compound); call it directly after any
-    * suspected interrupted append before trusting ranked retrieval. */
+    * silently mis-score — rebuild. [[appendToIndex]] runs this
+    * automatically before every append (stale stats cannot compound);
+    * call it directly after any suspected interrupted append before
+    * trusting ranked retrieval. */
   def verifyIndex(spark: SparkSession, path: String): IndexMeta =
-    verifyIndex(spark, path, "rebuild with saveIndex")
-
-  private def verifyIndex(spark: SparkSession, path: String,
-                          hint: String): IndexMeta = {
-    val meta = readMeta(path, hint)
-    IndexWitness.check(path, meta.dataFp,
-      "stale stats from an interrupted append",
-      "rebuild with saveIndex (or restore the pre-append state and re-append)")
-    meta
-  }
+    Sidecar.verify(path, "verifyIndex")
 
   /** Build + persist the index, partitioned by term bucket. Corpus
     * stats are aggregated from a read-back of the just-written postings
@@ -145,21 +100,16 @@ object InvertedIndex {
     * persisting the full posting build just to aggregate it twice). */
   def saveIndex(docs: DataFrame, path: String, nBuckets: Int = 16): Unit = {
     require(nBuckets >= 1, s"nBuckets must be >= 1, got $nBuckets")
-    // Old meta deleted before the overwrite, new meta last: a crash
-    // mid-rebuild leaves a loud no-meta state (the savePqIndex
-    // ordering discipline).
-    MetaIO.mkdirs(path)
-    MetaIO.deleteIfExists(s"$path/${MetaFile}")
-    buildPostings(docs)
-      .withColumn("term_bucket", termBucket(col("term"), nBuckets))
-      .write.mode("overwrite").partitionBy("term_bucket").parquet(path)
-    val spark = docs.sparkSession
-    val st = spark.read.parquet(path).agg(
-      count_distinct(col("doc_id")).as("n"),
-      coalesce(sum(col("tf")), lit(0L)).as("sumdl"),
-      count(lit(1)).as("rows")).head()
-    writeMeta(path, IndexMeta(nBuckets, st.getLong(0), st.getLong(1), st.getLong(2),
-      IndexWitness.fingerprint(path)))
+    Sidecar.build(path) {
+      buildPostings(docs)
+        .withColumn("term_bucket", termBucket(col("term"), nBuckets))
+        .write.mode("overwrite").partitionBy("term_bucket").parquet(path)
+      val st = docs.sparkSession.read.parquet(path).agg(
+        count_distinct(col("doc_id")).as("n"),
+        coalesce(sum(col("tf")), lit(0L)).as("sumdl"),
+        count(lit(1)).as("rows")).head()
+      IndexMeta(nBuckets, st.getLong(0), st.getLong(1), st.getLong(2), dataFp = "")
+    }
   }
 
   /** INCREMENTAL index maintenance — the [[TextDedup.saveBandIndex]] /
@@ -172,30 +122,25 @@ object InvertedIndex {
     * postings and over-count intersections — dedup upstream, exactly
     * as the ingest pipeline's effectively-once sink guarantees).
     */
-  def appendToIndex(newDocs: DataFrame, path: String): Unit = {
-    // Pre-append witness check: if a PREVIOUS append crashed between
-    // its parquet write and its meta write, the stats are stale — fail
-    // here, loudly, before compounding the drift (a file-listing
-    // fingerprint: filesystem metadata only, no job).
-    val meta = verifyIndex(newDocs.sparkSession, path, "build with saveIndex first")
-    // Persist the (nightly-sized) batch postings: they feed both the
-    // append write and the stats delta — corpus stats stay maintained
-    // incrementally, never recomputed over the whole index.
-    val batch = buildPostings(newDocs)
-      .withColumn("term_bucket", termBucket(col("term"), meta.nBuckets))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      batch.write.mode("append").partitionBy("term_bucket").parquet(path)
-      val st = batch.agg(
-        count_distinct(col("doc_id")).as("n"),
-        coalesce(sum(col("tf")), lit(0L)).as("sumdl"),
-        count(lit(1)).as("rows")).head()
-      writeMeta(path, meta.copy(docCount = meta.docCount + st.getLong(0),
+  def appendToIndex(newDocs: DataFrame, path: String): Unit =
+    Sidecar.maintain(path, "appendToIndex") { meta =>
+      // Persist the (nightly-sized) batch postings: they feed both the
+      // append write and the stats delta — corpus stats stay maintained
+      // incrementally, never recomputed over the whole index.
+      val batch = buildPostings(newDocs)
+        .withColumn("term_bucket", termBucket(col("term"), meta.nBuckets))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val st = try {
+        batch.write.mode("append").partitionBy("term_bucket").parquet(path)
+        batch.agg(
+          count_distinct(col("doc_id")).as("n"),
+          coalesce(sum(col("tf")), lit(0L)).as("sumdl"),
+          count(lit(1)).as("rows")).head()
+      } finally batch.unpersist()
+      ((), Some(meta.copy(docCount = meta.docCount + st.getLong(0),
         totalTokens = meta.totalTokens + st.getLong(1),
-        postingRows = meta.postingRows + st.getLong(2),
-        dataFp = IndexWitness.fingerprint(path)))
-    } finally batch.unpersist()
-  }
+        postingRows = meta.postingRows + st.getLong(2))))
+    }
 
   /** Compact the small files nightly [[appendToIndex]] runs accrete in
     * the term-bucket partitions (ix01 — the [[ProductQuantizer
@@ -208,19 +153,16 @@ object InvertedIndex {
     * rebuild, same window as an interrupted append. */
   def compactIndex(spark: SparkSession, path: String,
                    targetFileBytes: Long = 128L * 1024 * 1024)
-      : Seq[graft.ingest.Compaction.CompactionStats] = {
-    val meta = verifyIndex(spark, path, "nothing to compact")
-    val stats = graft.ingest.Compaction.compactPartitioned(
-      spark, path, targetFileBytes)
-    if (stats.exists(_.compacted))
-      writeMeta(path, meta.copy(dataFp = IndexWitness.fingerprint(path)))
-    stats
-  }
+      : Seq[graft.ingest.Compaction.CompactionStats] =
+    Sidecar.maintain(path, "compactIndex") { meta =>
+      val stats = graft.ingest.Compaction.compactPartitioned(spark, path, targetFileBytes)
+      (stats, Option.when(stats.exists(_.compacted))(meta))
+    }
 
   /** Open a [[saveIndex]] directory: the partitioned posting table plus
     * its metadata. Fails LOUDLY on a foreign directory. */
   def loadIndex(spark: SparkSession, path: String): (DataFrame, IndexMeta) = {
-    val meta = readMeta(path, "rebuild with saveIndex")
+    val meta = Sidecar.read(path)
     (spark.read.parquet(path), meta)
   }
 

@@ -110,7 +110,7 @@ object Layout {
 
   /** Underscore prefix: parquet directory listings treat the file as
     * hidden metadata, so it never pollutes a scan of the dir. */
-  private val PathTableMetaFile = "_graft_path_table.properties"
+  private[operators] val PathTableMetaFile = "_graft_path_table.properties"
 
   // One lock for all catalog registrations: concurrent loads of the
   // same path must not race a check-then-create.

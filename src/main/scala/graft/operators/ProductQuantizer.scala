@@ -150,14 +150,6 @@ object ProductQuantizer {
   // memory cut is realized at QUERY time, which is the point of PQ).
   // ---------------------------------------------------------------
 
-  private val MetaFile = "_graft_pq_index.properties"
-
-  /** Meta format version, bumped on every backward-incompatible sidecar
-    * change so an old index fails with a NAMED upgrade message, not a
-    * generic missing-property error (r17 advisory). v2 = the dataFp
-    * file-listing witness replaced the per-query row-count check. */
-  private val MetaFormatVersion = 2
-
   /** `codeRows` records the code-row count for observability and
     * incremental maintenance; `dataFp` is the consistency witness the
     * QUERY path checks — an [[IndexWitness]] file-listing fingerprint
@@ -166,72 +158,27 @@ object ProductQuantizer {
   final case class PqIndexMeta(d: Int, m: Int, k: Int, iterations: Int,
                                unitScale: Long, codeRows: Long, dataFp: String)
 
-  private def writeMeta(path: String, meta: PqIndexMeta): Unit = {
-    val p = new java.util.Properties()
-    p.setProperty("formatVersion", MetaFormatVersion.toString)
-    p.setProperty("d", meta.d.toString); p.setProperty("m", meta.m.toString)
-    p.setProperty("k", meta.k.toString)
-    p.setProperty("iterations", meta.iterations.toString)
-    p.setProperty("unitScale", meta.unitScale.toString)
-    p.setProperty("codeRows", meta.codeRows.toString)
-    p.setProperty("dataFp", meta.dataFp)
-    MetaIO.writePropsAtomic(path, MetaFile, p, "graft pq index")
-  }
-
-  private def readMeta(path: String): PqIndexMeta = {
-    val pOpt = MetaIO.readProps(s"$path/${MetaFile}")
-    require(pOpt.isDefined,
-      s"$path has no $MetaFile — not a graft pq index; build with savePqIndex")
-    val p = pOpt.get
-    // format check first (BOTH directions — r18 advisory: the version
-    // was written but never read back, so a newer-format index would be
-    // silently misread), so any mismatch gets a NAMED message instead
-    // of a generic missing-property error
-    IndexWitness.requireFormat(s"$path/$MetaFile", p, MetaFormatVersion,
-      "rebuild with savePqIndex")
-    def prop(k: String): String = {
-      val v = p.getProperty(k)
-      require(v != null, s"$path/$MetaFile is missing '$k' — corrupt; rebuild")
-      v
-    }
-    PqIndexMeta(prop("d").toInt, prop("m").toInt, prop("k").toInt,
-      prop("iterations").toInt, prop("unitScale").toLong, prop("codeRows").toLong,
-      prop("dataFp"))
-  }
-
-  /** The loud pre-query/pre-append staleness check: filesystem-metadata
-    * fingerprint only, NO Spark job over the index (r16 advisory). Crash
-    * windows (r18 advisory — the old hint suggested re-running the
-    * append, which cannot work here): an append that dies BEFORE its
-    * parquet commit leaves only hidden `_temporary` files, which the
-    * fingerprint excludes — this check passes and a re-run recovers
-    * silently. This error therefore fires only in the POST-commit
-    * window (data files visible, meta write lost), where re-running the
-    * append hits this same check — the hint names the one real remedy. */
-  private def checkWitness(path: String, meta: PqIndexMeta, who: String): Unit =
-    IndexWitness.check(path, meta.dataFp,
-      s"$who found a stale index: data files changed without their meta (an " +
-        "append or compaction crashed after its file commit, before the meta " +
-        "re-bless)",
-      "re-running the append/compaction would refuse this same state — " +
-        "rebuild with savePqIndex to re-bless the index")
+  /** The PQ sidecar. v2 = the dataFp file-listing witness replaced the
+    * per-query row-count check. */
+  private val PqSidecar = new PersistedIndex[PqIndexMeta]("pq", 2, "savePqIndex",
+      PersistedIndex.PropsFile("_graft_pq_index.properties", "graft pq index"))(
+    m => Seq("d" -> m.d, "m" -> m.m, "k" -> m.k, "iterations" -> m.iterations,
+      "unitScale" -> m.unitScale, "codeRows" -> m.codeRows),
+    f => PqIndexMeta(f.int("d"), f.int("m"), f.int("k"), f.int("iterations"),
+      f.long("unitScale"), f.long("codeRows"), f.dataFp))
 
   /** Fit + persist: `codes/` (N·m rows) and `centroids/`, with an
-    * atomic meta carrying the parameters and the file-listing witness.
-    * The OLD meta (if any) is deleted BEFORE the data overwrite and the
-    * new meta written last, so a crash mid-rebuild always leaves a
-    * loud no-meta state — never an old meta over new data (which a
-    * row-count witness could miss when counts coincide). */
+    * atomic meta carrying the parameters and the file-listing witness,
+    * in the [[PersistedIndex]] build order. */
   def savePqIndex(emb: DataFrame, d: Int, m: Int, k: Int, iterations: Int,
                   path: String, unitScale: Long = 1000000L): Unit = {
     val (codes, centroids) = fitCodes(emb, d, m, k, iterations, unitScale)
-    MetaIO.mkdirs(path)
-    MetaIO.deleteIfExists(s"$path/${MetaFile}")
-    codes.write.mode("overwrite").parquet(s"$path/codes")
-    centroids.write.mode("overwrite").parquet(s"$path/centroids")
-    val n = emb.sparkSession.read.parquet(s"$path/codes").count()
-    writeMeta(path, PqIndexMeta(d, m, k, iterations, unitScale, n,
-      IndexWitness.fingerprint(path)))
+    PqSidecar.build(path) {
+      codes.write.mode("overwrite").parquet(s"$path/codes")
+      centroids.write.mode("overwrite").parquet(s"$path/centroids")
+      val n = emb.sparkSession.read.parquet(s"$path/codes").count()
+      PqIndexMeta(d, m, k, iterations, unitScale, n, dataFp = "")
+    }
   }
 
   /** Append a batch of NEW vectors into a persisted index — the
@@ -248,41 +195,39 @@ object ProductQuantizer {
     * Scale shape: one batch-sized argmin against m·k·(d/m) BROADCAST
     * centroid rows — the corpus codes are never read, never re-fit.
     */
-  def appendToPqIndex(newEmb: DataFrame, path: String): Unit = {
-    val spark = newEmb.sparkSession
-    val meta = readMeta(path)
-    checkWitness(path, meta, "appendToPqIndex")
-    val centroids = spark.read.schema(CentroidsSchema).parquet(s"$path/centroids")
-    val subDim = meta.d / meta.m
-    val v = newEmb
-      .select(col("vec_id"),
-        when(size(col("embedding")) =!= meta.d, raise_error(concat(
-          lit("appendToPqIndex: embedding of length "),
-          size(col("embedding")).cast("string"), lit(" for vec_id "),
-          col("vec_id").cast("string"),
-          lit(s" does not match the index dimensionality d=${meta.d}"))))
-          .otherwise(col("embedding")).as("embedding"))
-      .select(col("vec_id").cast("long").as("id"), // pinned CodesSchema `id long`
-        posexplode(col("embedding")).as(Seq("dim", "__v")))
-      .select(col("id"), (col("dim") / subDim).cast("int").as("sub"),
-        (col("dim") % subDim).cast("int").as("j"),
-        floor(col("__v").cast("double") * meta.unitScale + 0.5).cast("long").as("x"))
-    // the fitCodesFromLong assignment stage verbatim, against the
-    // persisted geometry (argmin ties → lower cluster id)
-    val codes = v.join(broadcast(centroids), Seq("sub", "j"))
-      .groupBy(col("id"), col("sub"), col("cluster"))
-      .agg(sum((col("x") - col("c")) * (col("x") - col("c"))).as("__dist"))
-      .groupBy("id", "sub")
-      .agg(min(struct(col("__dist"), col("cluster"))).as("m"))
-      .select(col("id"), col("sub"), col("m.cluster").as("cluster"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      codes.write.mode("append").parquet(s"$path/codes")
-      val added = codes.count()
-      writeMeta(path, meta.copy(codeRows = meta.codeRows + added,
-        dataFp = IndexWitness.fingerprint(path)))
-    } finally codes.unpersist()
-  }
+  def appendToPqIndex(newEmb: DataFrame, path: String): Unit =
+    PqSidecar.maintain(path, "appendToPqIndex") { meta =>
+      val spark = newEmb.sparkSession
+      val centroids = spark.read.schema(CentroidsSchema).parquet(s"$path/centroids")
+      val subDim = meta.d / meta.m
+      val v = newEmb
+        .select(col("vec_id"),
+          when(size(col("embedding")) =!= meta.d, raise_error(concat(
+            lit("appendToPqIndex: embedding of length "),
+            size(col("embedding")).cast("string"), lit(" for vec_id "),
+            col("vec_id").cast("string"),
+            lit(s" does not match the index dimensionality d=${meta.d}"))))
+            .otherwise(col("embedding")).as("embedding"))
+        .select(col("vec_id").cast("long").as("id"), // pinned CodesSchema `id long`
+          posexplode(col("embedding")).as(Seq("dim", "__v")))
+        .select(col("id"), (col("dim") / subDim).cast("int").as("sub"),
+          (col("dim") % subDim).cast("int").as("j"),
+          floor(col("__v").cast("double") * meta.unitScale + 0.5).cast("long").as("x"))
+      // the fitCodesFromLong assignment stage verbatim, against the
+      // persisted geometry (argmin ties → lower cluster id)
+      val codes = v.join(broadcast(centroids), Seq("sub", "j"))
+        .groupBy(col("id"), col("sub"), col("cluster"))
+        .agg(sum((col("x") - col("c")) * (col("x") - col("c"))).as("__dist"))
+        .groupBy("id", "sub")
+        .agg(min(struct(col("__dist"), col("cluster"))).as("m"))
+        .select(col("id"), col("sub"), col("m.cluster").as("cluster"))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val added = try {
+        codes.write.mode("append").parquet(s"$path/codes")
+        codes.count()
+      } finally codes.unpersist()
+      ((), Some(meta.copy(codeRows = meta.codeRows + added)))
+    }
 
   /** Witness-check a persisted PQ index and return its meta — the
     * [[InvertedIndex.verifyIndex]] maintenance hook for this family:
@@ -290,11 +235,7 @@ object ProductQuantizer {
     * trusting searches, or to read the maintained stats without
     * touching the index (no Spark job — the witness is filesystem
     * metadata). */
-  def verifyPqIndex(path: String): PqIndexMeta = {
-    val meta = readMeta(path)
-    checkWitness(path, meta, "verifyPqIndex")
-    meta
-  }
+  def verifyPqIndex(path: String): PqIndexMeta = PqSidecar.verify(path, "verifyPqIndex")
 
   /** Compact the small files the nightly append lifecycle accretes
     * (ix01 — r18 directive #2): [[appendToPqIndex]] parquet-appends one
@@ -314,15 +255,11 @@ object ProductQuantizer {
     * already compact. */
   def compactPqIndex(spark: org.apache.spark.sql.SparkSession, path: String,
                      targetFileBytes: Long = 128L * 1024 * 1024)
-      : graft.ingest.Compaction.CompactionStats = {
-    val meta = readMeta(path)
-    checkWitness(path, meta, "compactPqIndex")
-    val stats = graft.ingest.Compaction.compactLeaf(
-      spark, s"$path/codes", targetFileBytes)
-    if (stats.compacted)
-      writeMeta(path, meta.copy(dataFp = IndexWitness.fingerprint(path)))
-    stats
-  }
+      : graft.ingest.Compaction.CompactionStats =
+    PqSidecar.maintain(path, "compactPqIndex") { meta =>
+      val stats = graft.ingest.Compaction.compactLeaf(spark, s"$path/codes", targetFileBytes)
+      (stats, Option.when(stats.compacted)(meta))
+    }
 
   /** The probe→ADC-lookup-table projection shared by the one-probe and
     * batched indexed searches: per probe, the m·k per-subspace
@@ -355,22 +292,6 @@ object ProductQuantizer {
   private val CodesSchema = "id long, sub int, cluster int"
   private val CentroidsSchema = "sub int, cluster int, j int, c long"
 
-  /** ADC top-k against a PERSISTED index: `probe` is ONE (vec_id,
-    * embedding) row — its id is excluded from candidates (pass an id
-    * absent from the index to search with an external vector). The
-    * one-row contract is ENFORCED (r16 advice: a silently multi-probe
-    * frame used to sum pdist ACROSS probes, and an empty one returned
-    * silently empty): a driver-side limit-2 COLLECT over the PROBE
-    * frame — one tiny job, never the index, and the collected row is
-    * re-issued as a local relation so the (often expensive) probe
-    * expression is never re-evaluated ([[oneProbeLocal]]); an in-plan
-    * raise_error cannot carry this contract because AQE's
-    * empty-relation propagation legally folds the whole plan to empty
-    * before the guard column is ever evaluated (measured). A stale index (interrupted
-    * build/append) fails loudly via the file-listing witness — a
-    * filesystem-metadata check, NO Spark job over the code table (r16
-    * advisory; the old form paid a full `codes.count()` per search).
-    * Multiple probes per pass belong on [[adcTopKIndexedBatch]]. */
   /** The one-probe contract check AND the probe materialization in ONE
     * job: the probe frame is often an expensive expression (a filter
     * over the whole corpus — probeOf(id) in every gate entry), and the
@@ -398,11 +319,26 @@ object ProductQuantizer {
     spark.createDataFrame(java.util.Arrays.asList(rows(0)), projected.schema)
   }
 
+  /** ADC top-k against a PERSISTED index: `probe` is ONE (vec_id,
+    * embedding) row — its id is excluded from candidates (pass an id
+    * absent from the index to search with an external vector). The
+    * one-row contract is ENFORCED (r16 advice: a silently multi-probe
+    * frame used to sum pdist ACROSS probes, and an empty one returned
+    * silently empty): a driver-side limit-2 COLLECT over the PROBE
+    * frame — one tiny job, never the index, and the collected row is
+    * re-issued as a local relation so the (often expensive) probe
+    * expression is never re-evaluated ([[oneProbeLocal]]); an in-plan
+    * raise_error cannot carry this contract because AQE's
+    * empty-relation propagation legally folds the whole plan to empty
+    * before the guard column is ever evaluated (measured). A stale index (interrupted
+    * build/append) fails loudly via the file-listing witness — a
+    * filesystem-metadata check, NO Spark job over the code table (r16
+    * advisory; the old form paid a full `codes.count()` per search).
+    * Multiple probes per pass belong on [[adcTopKIndexedBatch]]. */
   def adcTopKIndexed(probe: DataFrame, path: String, topK: Int): DataFrame = {
     require(topK >= 1, s"topK must be >= 1, got $topK")
     val spark = probe.sparkSession
-    val meta = readMeta(path)
-    checkWitness(path, meta, "adcTopKIndexed")
+    val meta = PqSidecar.verify(path, "adcTopKIndexed")
     val local = oneProbeLocal(probe, "adcTopKIndexed")
     val codes = spark.read.schema(CodesSchema).parquet(s"$path/codes")
     val centroids = spark.read.schema(CentroidsSchema).parquet(s"$path/centroids")
@@ -441,8 +377,7 @@ object ProductQuantizer {
   def adcTopKIndexedBatch(probes: DataFrame, path: String, topK: Int): DataFrame = {
     require(topK >= 1, s"topK must be >= 1, got $topK")
     val spark = probes.sparkSession
-    val meta = readMeta(path)
-    checkWitness(path, meta, "adcTopKIndexedBatch")
+    val meta = PqSidecar.verify(path, "adcTopKIndexedBatch")
     val codes = spark.read.schema(CodesSchema).parquet(s"$path/codes")
     val centroids = spark.read.schema(CentroidsSchema).parquet(s"$path/centroids")
     val table = probeTables(probes, centroids, meta, "adcTopKIndexedBatch")
@@ -644,8 +579,6 @@ object ProductQuantizer {
   // with IvfIndex's list-partitioned layout.
   // ---------------------------------------------------------------
 
-  private val IvfPqMetaFile = "_graft_ivfpq_index.properties"
-
   /** Pinned on-disk schemas (zero schema-inference jobs on the query
     * path, as with [[CodesSchema]]). `list_id` is the partition
     * column of the code table — each vector's m code rows live in its
@@ -653,110 +586,67 @@ object ProductQuantizer {
   private val IvfPqCodesSchema = "id long, sub int, cluster int, list_id int"
   private val CoarseSchema = "cluster int, dim int, c long"
 
-  /** IVF-PQ meta format: v3 added `listCounts` — per-list code-row
-    * counts, the drift signal [[appendToIvfPqIndex]]'s skew witness
-    * reads (r18 directive #3: coarse geometry is frozen on append by
-    * contract, so under corpus drift the lists skew and nProbe pruning
-    * quietly degrades; the counts make that loud). */
-  private val IvfPqMetaFormatVersion = 3
-
   final case class IvfPqIndexMeta(d: Int, m: Int, kCoarse: Int,
                                   coarseIterations: Int, kPq: Int,
                                   pqIterations: Int, unitScale: Long,
                                   codeRows: Long, dataFp: String,
                                   listCounts: Map[Int, Long])
 
-  private def writeIvfPqMeta(path: String, meta: IvfPqIndexMeta): Unit = {
-    val p = new java.util.Properties()
-    p.setProperty("formatVersion", IvfPqMetaFormatVersion.toString)
-    p.setProperty("d", meta.d.toString); p.setProperty("m", meta.m.toString)
-    p.setProperty("kCoarse", meta.kCoarse.toString)
-    p.setProperty("coarseIterations", meta.coarseIterations.toString)
-    p.setProperty("kPq", meta.kPq.toString)
-    p.setProperty("pqIterations", meta.pqIterations.toString)
-    p.setProperty("unitScale", meta.unitScale.toString)
-    p.setProperty("codeRows", meta.codeRows.toString)
-    p.setProperty("dataFp", meta.dataFp)
-    // kCoarse entries, list:count ascending — small by the same contract
-    // that makes the coarse table broadcastable
-    p.setProperty("listCounts", meta.listCounts.toSeq.sorted
-      .map { case (l, c) => s"$l:$c" }.mkString(","))
-    MetaIO.writePropsAtomic(path, IvfPqMetaFile, p, "graft ivf-pq index")
-  }
-
-  private def readIvfPqMeta(path: String): IvfPqIndexMeta = {
-    val pOpt = MetaIO.readProps(s"$path/${IvfPqMetaFile}")
-    require(pOpt.isDefined,
-      s"$path has no $IvfPqMetaFile — not a graft ivf-pq index; build with " +
-        "saveIvfPqIndex")
-    val p = pOpt.get
-    // format check first, BOTH directions (r18 advisory) — a v2 index
-    // (pre-listCounts) gets the named rebuild hint, a v4+ one the
-    // upgrade-the-engine hint
-    IndexWitness.requireFormat(s"$path/$IvfPqMetaFile", p, IvfPqMetaFormatVersion,
-      "rebuild with saveIvfPqIndex")
-    def prop(k: String): String = {
-      val v = p.getProperty(k)
-      require(v != null, s"$path/$IvfPqMetaFile is missing '$k' — corrupt; rebuild")
-      v
-    }
-    val listCounts = prop("listCounts").split(',').filter(_.nonEmpty).map { e =>
-      val Array(l, c) = e.split(':')
-      l.toInt -> c.toLong
-    }.toMap
-    IvfPqIndexMeta(prop("d").toInt, prop("m").toInt, prop("kCoarse").toInt,
-      prop("coarseIterations").toInt, prop("kPq").toInt,
-      prop("pqIterations").toInt, prop("unitScale").toLong,
-      prop("codeRows").toLong, prop("dataFp"), listCounts)
-  }
-
-  /** See [[checkWitness]] for the crash-window adjudication (this error
-    * fires only post-commit, where a re-run cannot recover). */
-  private def checkIvfPqWitness(path: String, meta: IvfPqIndexMeta,
-                                who: String): Unit =
-    IndexWitness.check(path, meta.dataFp,
-      s"$who found a stale index: data files changed without their meta (an " +
-        "append or compaction crashed after its file commit, before the meta " +
-        "re-bless)",
-      "re-running the append/compaction would refuse this same state — " +
-        "rebuild with saveIvfPqIndex to re-bless the index")
+  /** The IVF-PQ sidecar. v3 added `listCounts` — per-list code-row
+    * counts, the drift signal [[appendToIvfPqIndex]]'s skew witness
+    * reads (r18 directive #3: coarse geometry is frozen on append by
+    * contract, so under corpus drift the lists skew and nProbe pruning
+    * quietly degrades; the counts make that loud). They are written as
+    * kCoarse `list:count` entries, ascending — small by the same
+    * contract that makes the coarse table broadcastable. */
+  private val IvfPqSidecar = new PersistedIndex[IvfPqIndexMeta]("ivf-pq", 3,
+      "saveIvfPqIndex",
+      PersistedIndex.PropsFile("_graft_ivfpq_index.properties", "graft ivf-pq index"))(
+    m => Seq("d" -> m.d, "m" -> m.m, "kCoarse" -> m.kCoarse,
+      "coarseIterations" -> m.coarseIterations, "kPq" -> m.kPq,
+      "pqIterations" -> m.pqIterations, "unitScale" -> m.unitScale,
+      "codeRows" -> m.codeRows,
+      "listCounts" -> m.listCounts.toSeq.sorted.map { case (l, c) => s"$l:$c" }.mkString(",")),
+    f => IvfPqIndexMeta(f.int("d"), f.int("m"), f.int("kCoarse"),
+      f.int("coarseIterations"), f.int("kPq"), f.int("pqIterations"),
+      f.long("unitScale"), f.long("codeRows"), f.dataFp,
+      f("listCounts").split(',').filter(_.nonEmpty).map { e =>
+        val Array(l, c) = e.split(':')
+        l.toInt -> c.toLong
+      }.toMap))
 
   /** Fit + persist the IVF-PQ model: `coarse/` (kCoarse·d centroid
     * rows), `centroids/` (the m·kPq·(d/m) residual codebooks), and
     * `codes/` — (id, sub, cluster) PARTITIONED BY `list_id`, the
     * vector's coarse list, so probe-time list pruning happens in the
-    * parquet file index. Meta ordering as [[savePqIndex]]: old meta
-    * deleted before any data overwrite, new meta (with the
-    * [[IndexWitness]] file-listing fingerprint) written last — a crash
-    * mid-rebuild leaves a loud no-meta state. */
+    * parquet file index. Meta in the [[PersistedIndex]] build order. */
   def saveIvfPqIndex(emb: DataFrame, d: Int, m: Int,
                      kCoarse: Int, coarseIterations: Int,
                      kPq: Int, pqIterations: Int, path: String,
                      unitScale: Long = 1000000L): Unit = {
     val (coarseAssign, coarseCentroids, codes, residCentroids) =
       ivfPqFit(emb, d, m, kCoarse, coarseIterations, kPq, pqIterations, unitScale)
-    MetaIO.mkdirs(path)
-    MetaIO.deleteIfExists(s"$path/${IvfPqMetaFile}")
-    coarseCentroids.select(col("cluster"), col("dim"), col("c"))
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/coarse")
-    residCentroids.select(col("sub"), col("cluster"), col("j"), col("c"))
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/centroids")
-    // the code frame feeds the write AND the meta stats (total +
-    // per-list counts): persist it and count the persisted frame — the
-    // appendToIvfPqIndex pattern — instead of re-reading the whole
-    // codes/ directory after the write (r18 verdict: one extra full
-    // scan at build time, cosmetic at 1M codes, real at 10B)
-    val withList = codes
-      .join(coarseAssign.select(col("id"), col("cluster").as("list_id")), "id")
-      .select(col("id"), col("sub"), col("cluster"), col("list_id"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      withList.write.mode("overwrite").partitionBy("list_id").parquet(s"$path/codes")
-      val counts = listCountsOf(withList)
-      writeIvfPqMeta(path, IvfPqIndexMeta(d, m, kCoarse, coarseIterations,
-        kPq, pqIterations, unitScale, counts.values.sum,
-        IndexWitness.fingerprint(path), counts))
-    } finally withList.unpersist()
+    IvfPqSidecar.build(path) {
+      coarseCentroids.select(col("cluster"), col("dim"), col("c"))
+        .coalesce(1).write.mode("overwrite").parquet(s"$path/coarse")
+      residCentroids.select(col("sub"), col("cluster"), col("j"), col("c"))
+        .coalesce(1).write.mode("overwrite").parquet(s"$path/centroids")
+      // the code frame feeds the write AND the meta stats (total +
+      // per-list counts): persist it and count the persisted frame — the
+      // appendToIvfPqIndex pattern — instead of re-reading the whole
+      // codes/ directory after the write (r18 verdict: one extra full
+      // scan at build time, cosmetic at 1M codes, real at 10B)
+      val withList = codes
+        .join(coarseAssign.select(col("id"), col("cluster").as("list_id")), "id")
+        .select(col("id"), col("sub"), col("cluster"), col("list_id"))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val counts = try {
+        withList.write.mode("overwrite").partitionBy("list_id").parquet(s"$path/codes")
+        listCountsOf(withList)
+      } finally withList.unpersist()
+      IvfPqIndexMeta(d, m, kCoarse, coarseIterations, kPq, pqIterations, unitScale,
+        counts.values.sum, dataFp = "", counts)
+    }
   }
 
   /** Per-list code-row counts of a (…, list_id) code frame — ≤ kCoarse
@@ -792,66 +682,65 @@ object ProductQuantizer {
                          maxListSkew: Double = 16.0): Unit = {
     val spark = newEmb.sparkSession
     require(maxListSkew >= 1.0, s"maxListSkew must be >= 1, got $maxListSkew")
-    val meta = readIvfPqMeta(path)
-    checkIvfPqWitness(path, meta, "appendToIvfPqIndex")
-    val coarse = spark.read.schema(CoarseSchema).parquet(s"$path/coarse")
-    val residCentroids = spark.read.schema(CentroidsSchema)
-      .parquet(s"$path/centroids")
-    val subDim = meta.d / meta.m
-    val v = quantizedLongForm(
-      newEmb.select(col("vec_id"),
-        when(size(col("embedding")) =!= meta.d, raise_error(concat(
-          lit("appendToIvfPqIndex: embedding of length "),
-          size(col("embedding")).cast("string"), lit(" for vec_id "),
-          col("vec_id").cast("string"),
-          lit(s" does not match the index dimensionality d=${meta.d}"))))
-          .otherwise(col("embedding")).as("embedding")),
-      meta.unitScale)
-    // coarse assignment: the fitMicro assignment stage verbatim against
-    // the persisted geometry (argmin ties → lower cluster id)
-    val assign = v.join(broadcast(coarse), "dim")
-      .groupBy(col("id"), col("cluster"))
-      .agg(sum((col("x") - col("c")) * (col("x") - col("c"))).as("__dist"))
-      .groupBy("id")
-      .agg(min(struct(col("__dist"), col("cluster"))).as("m"))
-      .select(col("id"), col("m.cluster").as("list_id"))
-    // residual encode: fitCodesFromLong's assignment stage verbatim
-    // against the persisted residual codebooks
-    val rv = v
-      .join(assign, "id")
-      .join(broadcast(coarse.select(col("cluster").as("list_id"),
-        col("dim"), col("c"))), Seq("list_id", "dim"))
-      .select(col("id"), col("list_id"),
-        (col("dim") / subDim).cast("int").as("sub"),
-        (col("dim") % subDim).cast("int").as("j"),
-        (col("x") - col("c")).as("x"))
-    val codes = rv.join(broadcast(residCentroids), Seq("sub", "j"))
-      .groupBy(col("id"), col("list_id"), col("sub"), col("cluster"))
-      .agg(sum((col("x") - col("c")) * (col("x") - col("c"))).as("__dist"))
-      .groupBy("id", "list_id", "sub")
-      .agg(min(struct(col("__dist"), col("cluster"))).as("m"))
-      .select(col("id"), col("sub"), col("m.cluster").as("cluster"), col("list_id"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      // skew witness BEFORE the write: a refused append leaves the
-      // index untouched (the caller still holds the batch; the remedy
-      // re-ingests it through the rebuild)
-      val merged = (meta.listCounts.toSeq ++ listCountsOf(codes).toSeq)
-        .groupMapReduce(_._1)(_._2)(_ + _)
-      val total = merged.values.sum
-      val mean = total.toDouble / meta.kCoarse
-      val (fatList, fatCount) = merged.maxBy(_._2)
-      require(fatCount <= maxListSkew * mean,
-        f"appendToIvfPqIndex: list $fatList would hold $fatCount code rows, " +
-          f"${fatCount / mean}%.1f× the kCoarse=${meta.kCoarse} mean " +
-          f"($mean%.1f) — over maxListSkew=$maxListSkew. The coarse geometry " +
-          "is frozen on append and the corpus has drifted away from it; " +
-          "nProbe pruning is degrading. Re-fit with saveIvfPqIndex over the " +
-          "full corpus (including this batch), or raise the cap deliberately")
-      codes.write.mode("append").partitionBy("list_id").parquet(s"$path/codes")
-      writeIvfPqMeta(path, meta.copy(codeRows = total,
-        dataFp = IndexWitness.fingerprint(path), listCounts = merged))
-    } finally codes.unpersist()
+    IvfPqSidecar.maintain(path, "appendToIvfPqIndex") { meta =>
+      val coarse = spark.read.schema(CoarseSchema).parquet(s"$path/coarse")
+      val residCentroids = spark.read.schema(CentroidsSchema)
+        .parquet(s"$path/centroids")
+      val subDim = meta.d / meta.m
+      val v = quantizedLongForm(
+        newEmb.select(col("vec_id"),
+          when(size(col("embedding")) =!= meta.d, raise_error(concat(
+            lit("appendToIvfPqIndex: embedding of length "),
+            size(col("embedding")).cast("string"), lit(" for vec_id "),
+            col("vec_id").cast("string"),
+            lit(s" does not match the index dimensionality d=${meta.d}"))))
+            .otherwise(col("embedding")).as("embedding")),
+        meta.unitScale)
+      // coarse assignment: the fitMicro assignment stage verbatim against
+      // the persisted geometry (argmin ties → lower cluster id)
+      val assign = v.join(broadcast(coarse), "dim")
+        .groupBy(col("id"), col("cluster"))
+        .agg(sum((col("x") - col("c")) * (col("x") - col("c"))).as("__dist"))
+        .groupBy("id")
+        .agg(min(struct(col("__dist"), col("cluster"))).as("m"))
+        .select(col("id"), col("m.cluster").as("list_id"))
+      // residual encode: fitCodesFromLong's assignment stage verbatim
+      // against the persisted residual codebooks
+      val rv = v
+        .join(assign, "id")
+        .join(broadcast(coarse.select(col("cluster").as("list_id"),
+          col("dim"), col("c"))), Seq("list_id", "dim"))
+        .select(col("id"), col("list_id"),
+          (col("dim") / subDim).cast("int").as("sub"),
+          (col("dim") % subDim).cast("int").as("j"),
+          (col("x") - col("c")).as("x"))
+      val codes = rv.join(broadcast(residCentroids), Seq("sub", "j"))
+        .groupBy(col("id"), col("list_id"), col("sub"), col("cluster"))
+        .agg(sum((col("x") - col("c")) * (col("x") - col("c"))).as("__dist"))
+        .groupBy("id", "list_id", "sub")
+        .agg(min(struct(col("__dist"), col("cluster"))).as("m"))
+        .select(col("id"), col("sub"), col("m.cluster").as("cluster"), col("list_id"))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      try {
+        // skew witness BEFORE the write: a refused append leaves the
+        // index untouched (the caller still holds the batch; the remedy
+        // re-ingests it through the rebuild)
+        val merged = (meta.listCounts.toSeq ++ listCountsOf(codes).toSeq)
+          .groupMapReduce(_._1)(_._2)(_ + _)
+        val total = merged.values.sum
+        val mean = total.toDouble / meta.kCoarse
+        val (fatList, fatCount) = merged.maxBy(_._2)
+        require(fatCount <= maxListSkew * mean,
+          f"appendToIvfPqIndex: list $fatList would hold $fatCount code rows, " +
+            f"${fatCount / mean}%.1f× the kCoarse=${meta.kCoarse} mean " +
+            f"($mean%.1f) — over maxListSkew=$maxListSkew. The coarse geometry " +
+            "is frozen on append and the corpus has drifted away from it; " +
+            "nProbe pruning is degrading. Re-fit with saveIvfPqIndex over the " +
+            "full corpus (including this batch), or raise the cap deliberately")
+        codes.write.mode("append").partitionBy("list_id").parquet(s"$path/codes")
+        ((), Some(meta.copy(codeRows = total, listCounts = merged)))
+      } finally codes.unpersist()
+    }
   }
 
   /** [[verifyPqIndex]] for the IVF-PQ family. The returned meta carries
@@ -859,11 +748,8 @@ object ProductQuantizer {
     * list-skew drift signal — `max(listCounts) / (codeRows / kCoarse)`
     * — on a schedule instead of discovering it when an append refuses;
     * zero Spark jobs either way. */
-  def verifyIvfPqIndex(path: String): IvfPqIndexMeta = {
-    val meta = readIvfPqMeta(path)
-    checkIvfPqWitness(path, meta, "verifyIvfPqIndex")
-    meta
-  }
+  def verifyIvfPqIndex(path: String): IvfPqIndexMeta =
+    IvfPqSidecar.verify(path, "verifyIvfPqIndex")
 
   /** [[compactPqIndex]] for the list-partitioned IVF-PQ layout: every
     * nightly [[appendToIvfPqIndex]] drops one file set into EACH list
@@ -876,29 +762,13 @@ object ProductQuantizer {
     * content-identical, crash window = witness-stale = rebuild. */
   def compactIvfPqIndex(spark: org.apache.spark.sql.SparkSession, path: String,
                         targetFileBytes: Long = 128L * 1024 * 1024)
-      : Seq[graft.ingest.Compaction.CompactionStats] = {
-    val meta = readIvfPqMeta(path)
-    checkIvfPqWitness(path, meta, "compactIvfPqIndex")
-    val stats = graft.ingest.Compaction.compactPartitioned(
-      spark, s"$path/codes", targetFileBytes)
-    if (stats.exists(_.compacted))
-      writeIvfPqMeta(path, meta.copy(dataFp = IndexWitness.fingerprint(path)))
-    stats
-  }
+      : Seq[graft.ingest.Compaction.CompactionStats] =
+    IvfPqSidecar.maintain(path, "compactIvfPqIndex") { meta =>
+      val stats = graft.ingest.Compaction.compactPartitioned(
+        spark, s"$path/codes", targetFileBytes)
+      (stats, Option.when(stats.exists(_.compacted))(meta))
+    }
 
-  /** IVF-PQ search against a PERSISTED index — [[ivfPqTopK]] with the
-    * fit amortized to zero and the list pruning pushed into the
-    * STORAGE layer: the probe's `nProbe` nearest lists are ranked over
-    * the kCoarse-row coarse table and collected (≤ kCoarse ints — the
-    * [[IvfIndex]] nearestLists budget), so the code-table scan carries
-    * LITERAL partition filters and parquet prunes to exactly nProbe of
-    * kCoarse list partitions; candidates there are scored by ADC with
-    * the probe's PER-LIST residual lookup tables (nProbe·m·kPq
-    * broadcast rows). One-probe contract, staleness witness, and
-    * raise-on-empty exactly as [[adcTopKIndexed]].
-    *
-    * @return (vec_id, dist_u) top-`topK` by integer ADC distance
-    *         ascending, vec_id tie-break, probe excluded */
   /** BATCHED IVF-PQ search against a persisted index — the
     * [[adcTopKIndexedBatch]] production shape with list pruning: N
     * probes are scored in ONE pass over the UNION of their probed list
@@ -923,8 +793,7 @@ object ProductQuantizer {
     require(topK >= 1, s"topK must be >= 1, got $topK")
     require(maxProbes >= 1, s"maxProbes must be >= 1, got $maxProbes")
     val spark = probes.sparkSession
-    val meta = readIvfPqMeta(path)
-    checkIvfPqWitness(path, meta, "ivfPqTopKIndexedBatch")
+    val meta = IvfPqSidecar.verify(path, "ivfPqTopKIndexedBatch")
     require(nProbe >= 1 && nProbe <= meta.kCoarse,
       s"nProbe must be in [1, kCoarse=${meta.kCoarse}], got $nProbe")
     val subDim = meta.d / meta.m
@@ -1007,12 +876,24 @@ object ProductQuantizer {
     } finally pv.unpersist()
   }
 
+  /** IVF-PQ search against a PERSISTED index — [[ivfPqTopK]] with the
+    * fit amortized to zero and the list pruning pushed into the
+    * STORAGE layer: the probe's `nProbe` nearest lists are ranked over
+    * the kCoarse-row coarse table and collected (≤ kCoarse ints — the
+    * [[IvfIndex]] nearestLists budget), so the code-table scan carries
+    * LITERAL partition filters and parquet prunes to exactly nProbe of
+    * kCoarse list partitions; candidates there are scored by ADC with
+    * the probe's PER-LIST residual lookup tables (nProbe·m·kPq
+    * broadcast rows). One-probe contract, staleness witness, and
+    * raise-on-empty exactly as [[adcTopKIndexed]].
+    *
+    * @return (vec_id, dist_u) top-`topK` by integer ADC distance
+    *         ascending, vec_id tie-break, probe excluded */
   def ivfPqTopKIndexed(probe: DataFrame, path: String, topK: Int,
                        nProbe: Int): DataFrame = {
     require(topK >= 1, s"topK must be >= 1, got $topK")
     val spark = probe.sparkSession
-    val meta = readIvfPqMeta(path)
-    checkIvfPqWitness(path, meta, "ivfPqTopKIndexed")
+    val meta = IvfPqSidecar.verify(path, "ivfPqTopKIndexed")
     require(nProbe >= 1 && nProbe <= meta.kCoarse,
       s"nProbe must be in [1, kCoarse=${meta.kCoarse}], got $nProbe")
     // one collect does the contract check AND pins the probe locally:

@@ -209,8 +209,6 @@ object Similarity {
   // cost is |batch| × cluster-local work, never a corpus re-fit.
   // ------------------------------------------------------------------
 
-  private val SemMetaFile = "_graft_semantic_index.properties"
-
   /** Model/layout parameters persisted with the index; `dataFp` is the
     * consistency witness the query path checks — an [[IndexWitness]]
     * file-listing fingerprint, NO Spark job over the corpus (r16
@@ -219,65 +217,16 @@ object Similarity {
   final case class SemIndexMeta(d: Int, k: Int, iterations: Int,
                                 unitScale: Long, corpusRows: Long, dataFp: String)
 
-  /** Meta format version, bumped on every backward-incompatible sidecar
-    * change so an old index fails with a NAMED upgrade message, not a
-    * generic missing-property error (r17 advisory). v2 = the dataFp
-    * file-listing witness replaced the per-query corpus count. */
-  private val SemMetaFormatVersion = 2
+  /** The semantic-index sidecar. v2 = the dataFp file-listing witness
+    * replaced the per-query corpus count. */
+  private val SemSidecar = new PersistedIndex[SemIndexMeta]("semantic", 2,
+      "saveSemanticIndex",
+      PersistedIndex.PropsFile("_graft_semantic_index.properties", "graft semantic index"))(
+    m => Seq("d" -> m.d, "k" -> m.k, "iterations" -> m.iterations,
+      "unitScale" -> m.unitScale, "corpusRows" -> m.corpusRows),
+    f => SemIndexMeta(f.int("d"), f.int("k"), f.int("iterations"),
+      f.long("unitScale"), f.long("corpusRows"), f.dataFp))
 
-  private def writeSemMeta(path: String, m: SemIndexMeta): Unit = {
-    val p = new java.util.Properties()
-    p.setProperty("formatVersion", SemMetaFormatVersion.toString)
-    p.setProperty("d", m.d.toString); p.setProperty("k", m.k.toString)
-    p.setProperty("iterations", m.iterations.toString)
-    p.setProperty("unitScale", m.unitScale.toString)
-    p.setProperty("corpusRows", m.corpusRows.toString)
-    p.setProperty("dataFp", m.dataFp)
-    MetaIO.writePropsAtomic(path, SemMetaFile, p, "graft semantic index")
-  }
-
-  private def readSemMeta(path: String): SemIndexMeta = {
-    val pOpt = MetaIO.readProps(s"$path/${SemMetaFile}")
-    require(pOpt.isDefined,
-      s"$path has no $SemMetaFile — not a graft semantic index; build with saveSemanticIndex")
-    val p = pOpt.get
-    // format check first, BOTH directions (r18 advisory: the version
-    // was written but never read back, so a newer-format index would be
-    // silently misread): old/absent → NAMED upgrade message; newer →
-    // upgrade-the-engine message
-    IndexWitness.requireFormat(s"$path/$SemMetaFile", p, SemMetaFormatVersion,
-      "rebuild with saveSemanticIndex")
-    def prop(k: String): String = {
-      val v = p.getProperty(k)
-      require(v != null, s"$path/$SemMetaFile is missing '$k' — corrupt; rebuild")
-      v
-    }
-    SemIndexMeta(prop("d").toInt, prop("k").toInt, prop("iterations").toInt,
-      prop("unitScale").toLong, prop("corpusRows").toLong, prop("dataFp"))
-  }
-
-  /** Loud staleness check — filesystem-metadata fingerprint only, no
-    * Spark job over the corpus (r16 advisory). */
-  private def checkSemWitness(path: String, meta: SemIndexMeta, who: String): Unit =
-    // Two-crash-window adjudication (the corrected ProductQuantizer
-    // wording, r19 verdict): a crash BEFORE the corpus append commits
-    // leaves the listing matching the old meta — no staleness, a re-run
-    // just works. This error fires only in the POST-commit window
-    // (files landed, meta re-bless lost), where appendToSemanticIndex's
-    // own pre-append check would refuse the same state — so the honest
-    // hint is rebuild, never "re-run the append".
-    IndexWitness.check(path, meta.dataFp,
-      s"$who found a stale index: corpus files changed without their meta (an " +
-        "append or compaction crashed after its file commit, before the meta " +
-        "re-bless)",
-      "re-running the append/compaction would refuse this same state — " +
-        "rebuild with saveSemanticIndex to re-bless the index")
-
-  /** Fit + persist the semantic index: `centroids/` (the k·d rows the
-    * corpus assignments were computed against —
-    * [[KMeansExact.fitMicro]]'s used-centroids, so batch assignment
-    * shares the corpus's exact geometry) and `corpus/` (vec_id,
-    * embedding as double[], partitioned by cluster). */
   /** Per-row loud dimensionality check (KMeansExact declares d as
     * caller-asserted; the PERSISTED index makes this a cross-job
     * contract, so it is enforced at the boundary instead): a vector of
@@ -290,6 +239,11 @@ object Similarity {
         lit(s" does not match the index dimensionality d=$d"))))
         .otherwise(asDouble(col("embedding"))).as("e"))
 
+  /** Fit + persist the semantic index: `centroids/` (the k·d rows the
+    * corpus assignments were computed against —
+    * [[KMeansExact.fitMicro]]'s used-centroids, so batch assignment
+    * shares the corpus's exact geometry) and `corpus/` (vec_id,
+    * embedding as double[], partitioned by cluster). */
   def saveSemanticIndex(emb: DataFrame, d: Int, k: Int, iterations: Int,
                         path: String): Unit = {
     val unitScale = 1000000L
@@ -297,19 +251,14 @@ object Similarity {
     val (assign, centroids) = KMeansExact.fitMicro(
       checked.select(col("vec_id").as("id"), col("e").as("vec")),
       d = d, k = k, iterations = iterations, unitScale = unitScale)
-    // Old meta deleted BEFORE the data overwrite, new meta written
-    // last: a crash mid-rebuild leaves a loud no-meta state, never an
-    // old meta over new data (r16 advice — a changed unitScale/k with
-    // coinciding row counts would otherwise mis-quantize silently).
-    MetaIO.mkdirs(path)
-    MetaIO.deleteIfExists(s"$path/${SemMetaFile}")
-    centroids.write.mode("overwrite").parquet(s"$path/centroids")
-    checked
-      .join(assign.select(col("id").as("vec_id"), col("cluster")), "vec_id")
-      .write.mode("overwrite").partitionBy("cluster").parquet(s"$path/corpus")
-    val n = emb.sparkSession.read.parquet(s"$path/corpus").count()
-    writeSemMeta(path, SemIndexMeta(d, k, iterations, unitScale, n,
-      IndexWitness.fingerprint(path)))
+    SemSidecar.build(path) {
+      centroids.write.mode("overwrite").parquet(s"$path/centroids")
+      checked
+        .join(assign.select(col("id").as("vec_id"), col("cluster")), "vec_id")
+        .write.mode("overwrite").partitionBy("cluster").parquet(s"$path/corpus")
+      val n = emb.sparkSession.read.parquet(s"$path/corpus").count()
+      SemIndexMeta(d, k, iterations, unitScale, n, dataFp = "")
+    }
   }
 
   /** Append a batch's SURVIVORS into the index corpus — the lifecycle
@@ -321,17 +270,20 @@ object Similarity {
     * update the witness. The pre-append witness check makes a
     * previously-interrupted append fail loudly before compounding.
     * Contract: rows are survivors with vec_ids new to the index. */
-  def appendToSemanticIndex(survivors: DataFrame, path: String): Unit = {
-    val meta = readSemMeta(path)
-    checkSemWitness(path, meta, "appendToSemanticIndex")
-    val checked = checkedDim(survivors, meta.d, "appendToSemanticIndex")
-    val assigned = assignToCentroids(checked, path, meta)
-    val rows = checked.join(assigned, "vec_id").select("vec_id", "e", "cluster")
-    rows.write.mode("append").partitionBy("cluster").parquet(s"$path/corpus")
-    val added = rows.count()
-    writeSemMeta(path, meta.copy(corpusRows = meta.corpusRows + added,
-      dataFp = IndexWitness.fingerprint(path)))
-  }
+  def appendToSemanticIndex(survivors: DataFrame, path: String): Unit =
+    SemSidecar.maintain(path, "appendToSemanticIndex") { meta =>
+      val checked = checkedDim(survivors, meta.d, "appendToSemanticIndex")
+      // the rows feed the write and the count: persisted, so the caller's
+      // pipeline and the centroid assignment run once
+      val rows = checked.join(assignToCentroids(checked, path, meta), "vec_id")
+        .select("vec_id", "e", "cluster")
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val added = try {
+        rows.write.mode("append").partitionBy("cluster").parquet(s"$path/corpus")
+        rows.count()
+      } finally rows.unpersist()
+      ((), Some(meta.copy(corpusRows = meta.corpusRows + added)))
+    }
 
   /** Compact the small files nightly [[appendToSemanticIndex]] runs
     * accrete in the cluster partitions (ix01 — the
@@ -344,23 +296,19 @@ object Similarity {
   def compactSemanticIndex(spark: org.apache.spark.sql.SparkSession,
                            path: String,
                            targetFileBytes: Long = 128L * 1024 * 1024)
-      : Seq[graft.ingest.Compaction.CompactionStats] = {
-    val meta = readSemMeta(path)
-    checkSemWitness(path, meta, "compactSemanticIndex")
-    val stats = graft.ingest.Compaction.compactPartitioned(
-      spark, s"$path/corpus", targetFileBytes)
-    if (stats.exists(_.compacted))
-      writeSemMeta(path, meta.copy(dataFp = IndexWitness.fingerprint(path)))
-    stats
-  }
+      : Seq[graft.ingest.Compaction.CompactionStats] =
+    SemSidecar.maintain(path, "compactSemanticIndex") { meta =>
+      val stats = graft.ingest.Compaction.compactPartitioned(
+        spark, s"$path/corpus", targetFileBytes)
+      (stats, Option.when(stats.exists(_.compacted))(meta))
+    }
 
   /** Open a persisted semantic index for composition OUTSIDE the batch
     * dedup path (the st14 streaming replay): meta + centroid and corpus
     * frames, witness-checked loudly up front. */
   def loadSemanticIndexParts(spark: org.apache.spark.sql.SparkSession,
                              path: String): (SemIndexMeta, DataFrame, DataFrame) = {
-    val meta = readSemMeta(path)
-    checkSemWitness(path, meta, "loadSemanticIndexParts")
+    val meta = SemSidecar.verify(path, "loadSemanticIndexParts")
     (meta, spark.read.parquet(s"$path/centroids"),
       spark.read.parquet(s"$path/corpus"))
   }
@@ -429,8 +377,7 @@ object Similarity {
     require(maxClusterSize >= 1,
       s"maxClusterSize must be >= 1, got $maxClusterSize")
     val spark = newBatch.sparkSession
-    val meta = readSemMeta(path)
-    checkSemWitness(path, meta, "semanticDedupIncremental")
+    val meta = SemSidecar.verify(path, "semanticDedupIncremental")
     val corpus = spark.read.parquet(s"$path/corpus")
     // dim-checked batch + the shared broadcast-centroid argmin (the
     // assignment stage of KMeansExact.fitMicro verbatim, against the

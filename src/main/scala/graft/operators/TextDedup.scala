@@ -239,56 +239,20 @@ object TextDedup {
   /** Band-index sidecar format: v2 added the [[IndexWitness]]
     * fingerprint + append lifecycle (r19 directive #1) — a v1 index
     * predates `formatVersion` entirely and gets the named rebuild
-    * message via [[IndexWitness.requireFormat]]. */
+    * message. */
   val BandIndexFormatVersion = 2
+
+  /** The band-index sidecar: the [[Layout]] path-table properties, with
+    * the banding parameters beside the reserved bucket spec. */
+  private val BandSidecar = new PersistedIndex[BandIndexMeta]("band",
+      BandIndexFormatVersion, "saveBandIndex", PersistedIndex.PathTable())(
+    m => Seq("numHashes" -> m.numHashes, "rowsPerBand" -> m.rowsPerBand),
+    f => BandIndexMeta(f.int("numHashes"), f.int("rowsPerBand"), f.int("nBuckets")))
 
   /** Read the persisted fingerprint parameters; fails LOUDLY on a
     * pre-metadata or foreign directory instead of silently joining with
     * mismatched band keys. */
-  def readBandIndexMeta(path: String): BandIndexMeta = {
-    val propsOpt = Layout.pathTableProps(path)
-    require(propsOpt.isDefined,
-      s"$path has no path-table metadata — not a graft band index " +
-        "(or written by a pre-metadata version); rebuild with saveBandIndex")
-    val props = propsOpt.get
-    val pj = new java.util.Properties()
-    props.foreach { case (k, v) => pj.setProperty(k, v) }
-    IndexWitness.requireFormat(s"$path (band index sidecar)", pj,
-      BandIndexFormatVersion, "rebuild with saveBandIndex")
-    def get(k: String): Int = {
-      require(props.contains(k), s"band index metadata at $path is missing '$k'")
-      props(k).toInt
-    }
-    BandIndexMeta(get("numHashes"), get("rowsPerBand"), get("nBuckets"))
-  }
-
-  /** The witness + meta re-bless shared by save/append/compact: the
-    * caller props plus the CURRENT data-file fingerprint, published
-    * last — a crash before this leaves either a fingerprint-less
-    * sidecar (save) or the stale old fingerprint (append/compact),
-    * both loud on the next read. */
-  private def blessBandIndex(path: String, meta: BandIndexMeta): Unit =
-    Layout.rewritePathTableProps(path, Map(
-      "formatVersion" -> BandIndexFormatVersion.toString,
-      "numHashes" -> meta.numHashes.toString,
-      "rowsPerBand" -> meta.rowsPerBand.toString,
-      "dataFp" -> IndexWitness.fingerprint(path)))
-
-  /** Loud staleness check before every index read/append/compact —
-    * the [[ProductQuantizer]] two-crash-window adjudication: this only
-    * fires post-commit (files landed, meta re-bless lost), where a
-    * re-run would refuse the same state. */
-  private def checkBandWitness(path: String, who: String): Unit = {
-    val fp = Layout.pathTableProps(path).flatMap(_.get("dataFp")).getOrElse(
-      sys.error(s"$path has no dataFp in its sidecar — the build crashed " +
-        "before the witness bless; rebuild with saveBandIndex"))
-    IndexWitness.check(path, fp,
-      s"$who found a stale index: band files changed without their meta (an " +
-        "append or compaction crashed after its file commit, before the meta " +
-        "re-bless)",
-      "re-running the append/compaction would refuse this same state — " +
-        "rebuild with saveBandIndex to re-bless the index")
-  }
+  def readBandIndexMeta(path: String): BandIndexMeta = BandSidecar.read(path)
 
   /** Persist the LSH band index of a corpus: the (band_id, band_key,
     * doc_id, bucket) rows, computed via the zero-shuffle signature path
@@ -312,12 +276,10 @@ object TextDedup {
                     nBuckets: Int = 8): Unit = {
     val bands = bandRows(minhashSignaturesNoShuffle(docs, numHashes = numHashes), rowsPerBand)
       .withColumn("bucket", concat_ws("#", col("band_id"), col("band_key")))
-    Layout.saveBucketedPath(bands, path, "bucket", nBuckets,
-      extraProps = Map(
-        "formatVersion" -> BandIndexFormatVersion.toString,
-        "numHashes" -> numHashes.toString,
-        "rowsPerBand" -> rowsPerBand.toString))
-    blessBandIndex(path, BandIndexMeta(numHashes, rowsPerBand, nBuckets))
+    BandSidecar.build(path) {
+      Layout.saveBucketedPath(bands, path, "bucket", nBuckets, BandSidecar.unblessed)
+      BandIndexMeta(numHashes, rowsPerBand, nBuckets)
+    }
   }
 
   /** Append a batch's band rows into a persisted [[saveBandIndex]]
@@ -332,16 +294,15 @@ object TextDedup {
     * are SURVIVORS of the batch dedup with doc_ids new to the index —
     * re-appending an indexed doc_id would double its band rows and
     * double-emit its pairs (the appendToSemanticIndex contract). */
-  def appendToBandIndex(newDocs: DataFrame, indexPath: String): Unit = {
-    val meta = readBandIndexMeta(indexPath)
-    checkBandWitness(indexPath, "appendToBandIndex")
-    val bands = bandRows(
-        minhashSignaturesNoShuffle(newDocs, numHashes = meta.numHashes),
-        meta.rowsPerBand)
-      .withColumn("bucket", concat_ws("#", col("band_id"), col("band_key")))
-    Layout.appendBucketedPath(bands, indexPath)
-    blessBandIndex(indexPath, meta)
-  }
+  def appendToBandIndex(newDocs: DataFrame, indexPath: String): Unit =
+    BandSidecar.maintain(indexPath, "appendToBandIndex") { meta =>
+      val bands = bandRows(
+          minhashSignaturesNoShuffle(newDocs, numHashes = meta.numHashes),
+          meta.rowsPerBand)
+        .withColumn("bucket", concat_ws("#", col("band_id"), col("band_key")))
+      Layout.appendBucketedPath(bands, indexPath)
+      ((), Some(meta))
+    }
 
   /** Compact the per-night small files [[appendToBandIndex]] accretes
     * (r19 directive #2 — the [[ProductQuantizer.compactPqIndex]]
@@ -354,20 +315,17 @@ object TextDedup {
     * (spec-gated). */
   def compactBandIndex(spark: SparkSession, indexPath: String,
                        targetFileBytes: Long = 128L * 1024 * 1024)
-      : graft.ingest.Compaction.CompactionStats = {
-    val meta = readBandIndexMeta(indexPath)
-    checkBandWitness(indexPath, "compactBandIndex")
-    val stats = Layout.compactBucketedPath(spark, indexPath, targetFileBytes)
-    if (stats.compacted) blessBandIndex(indexPath, meta)
-    stats
-  }
+      : graft.ingest.Compaction.CompactionStats =
+    BandSidecar.maintain(indexPath, "compactBandIndex") { meta =>
+      val stats = Layout.compactBucketedPath(spark, indexPath, targetFileBytes)
+      (stats, Option.when(stats.compacted)(meta))
+    }
 
   /** Open a [[saveBandIndex]] directory as the bucketed catalog table
     * the candidate join consumes ([[Layout.loadBucketedPath]]),
     * witness-checked loudly up front. */
   def loadBandIndex(spark: SparkSession, path: String): DataFrame = {
-    readBandIndexMeta(path) // band-specific loud failure on foreign dirs
-    checkBandWitness(path, "loadBandIndex")
+    BandSidecar.verify(path, "loadBandIndex")
     Layout.loadBucketedPath(spark, path)._1
   }
 
@@ -384,8 +342,8 @@ object TextDedup {
     */
   def incrementalCandidatePairs(newDocs: DataFrame, indexPath: String): DataFrame = {
     val spark = newDocs.sparkSession
-    val meta = readBandIndexMeta(indexPath)
-    val idx = loadBandIndex(spark, indexPath)
+    val meta = BandSidecar.verify(indexPath, "incrementalCandidatePairs")
+    val idx = Layout.loadBucketedPath(spark, indexPath)._1
     // The new batch's band rows feed THREE join branches (old-new probe
     // + both sides of the new-new self-join); working-set
     // materialization keeps the fingerprint pipeline — the dominant

@@ -238,6 +238,51 @@ class StatefulTtlSpec extends SparkSpec {
     }
   }
 
+  test("rateLimitTtl: a late row never shortens the lease; a lease-only refresh is written") {
+    // maxPerKey 1, horizon 60 s, and a 45 s watermark delay so a row up
+    // to 45 s older than the newest is still processed. Key 7's first
+    // row is admitted; each feed then touches key 7 only with rejected
+    // rows (no step-state change), advances the watermark to 95 s with
+    // key 8, and sends key 7 once more: re-admission would mean key 7
+    // was evicted, i.e. its lease had fallen below 35 s.
+    //  - "monotone": admitted at 50 s, then a late row at 20 s; the
+    //    lease stays 50 s (timeout 110 s), it must not drop to 20 s.
+    //  - "lease-only": admitted at 10 s, refreshed by a rejected row at
+    //    50 s, then a late row at 20 s; the refresh must have been
+    //    written, or the late row computes its lease from 10 s.
+    val feeds = Seq(
+      "monotone" -> Seq(50L, 20L),
+      "lease-only" -> Seq(10L, 50L, 20L))
+    for ((label, prov) <- providers; (rule, key7Secs) <- feeds) withProvider(prov) {
+      implicit val ctx = spark.sqlContext
+      val ms = MemoryStream[(Long, Double, Timestamp)]
+      val name = s"ttl_rl_lease_${label}_${rule.replace('-', '_')}_${System.nanoTime()}"
+      val q = StatefulOps.rateLimitTtl(ms.toDS(), maxPerKey = 1,
+          delayThreshold = "45 seconds", horizonMs = 60L * 1000)
+        .toDF("user_id", "value")
+        .writeStream.outputMode("append").format("memory").queryName(name).start()
+      def send(key: Long, value: Double, secs: Long): Unit = {
+        ms.addData((key, value, new Timestamp(secs * 1000L)))
+        q.processAllAvailable()
+      }
+      try {
+        key7Secs.zipWithIndex.foreach { case (s, i) => send(7L, i + 1.0, s) }
+        send(8L, 9.0, 140L) // watermark 95 s after this batch
+        send(8L, 9.5, 141L) // timeout pass at watermark 95 s
+        send(7L, 4.0, 142L)
+        def sevens(): Set[Double] = spark.table(name).as[(Long, Double)].collect()
+          .filter(_._1 == 7L).map(_._2).toSet
+        assert(sevens() == Set(1.0),
+          s"[$label/$rule] key 7 must still hold its budget at watermark 95 s: ${sevens()}")
+        // control: past the lease of 142 s key 7 is evicted and re-admitted
+        send(8L, 9.8, 300L)
+        send(8L, 9.9, 301L)
+        send(7L, 5.0, 302L)
+        assert(sevens() == Set(1.0, 5.0), s"[$label/$rule] expected eviction: ${sevens()}")
+      } finally q.stop()
+    }
+  }
+
   test("smallestKByKeyTtl equals smallestKByKey inside the horizon and evicts idle keys") {
     for ((label, prov) <- providers) withProvider(prov) {
       implicit val ctx = spark.sqlContext
