@@ -160,9 +160,11 @@ object InvertedIndex {
     }
 
   /** Open a [[saveIndex]] directory: the partitioned posting table plus
-    * its metadata. Fails LOUDLY on a foreign directory. */
+    * its metadata. Fails LOUDLY on a foreign directory, and on a stale
+    * one (the [[verifyIndex]] witness): search and BM25 scoring never
+    * run over postings the meta's stats do not describe. */
   def loadIndex(spark: SparkSession, path: String): (DataFrame, IndexMeta) = {
-    val meta = Sidecar.read(path)
+    val meta = Sidecar.verify(path, "loadIndex")
     (spark.read.parquet(path), meta)
   }
 

@@ -159,6 +159,21 @@ class InvertedIndexSpec extends SparkSpec {
     assert(e2.getMessage.contains("stale stats"))
   }
 
+  test("search and BM25 refuse an index with postings appended behind its meta") {
+    val p = tmpDir("invidx-stale-search")
+    InvertedIndex.saveIndex(docs.filter(col("doc_id") <= 2), p)
+    assert(InvertedIndex.searchIndexed(spark, p, Seq("fox")).count() == 2L)
+    InvertedIndex.buildPostings(docs.filter(col("doc_id") === 3))
+      .withColumn("term_bucket", lit(0L)).coalesce(1)
+      .write.mode("append").partitionBy("term_bucket").parquet(p)
+    val e1 = intercept[IllegalArgumentException](
+      InvertedIndex.searchIndexed(spark, p, Seq("lazy")).collect())
+    assert(e1.getMessage.contains("stale"), e1.getMessage)
+    val e2 = intercept[IllegalArgumentException](
+      InvertedIndex.searchIndexedBm25(spark, p, Seq("lazy")).collect())
+    assert(e2.getMessage.contains("stale"), e2.getMessage)
+  }
+
   test("a foreign directory is rejected loudly") {
     val bogus = tmpDir("invidx-bogus")
     docs.write.mode("overwrite").parquet(bogus)

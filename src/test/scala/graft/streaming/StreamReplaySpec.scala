@@ -380,6 +380,95 @@ class StreamReplaySpec extends SparkSpec {
     }
   }
 
+  /** Runs `body` with a listener on the replay session and returns the
+    * number of micro-batches that read input, per query. The listener
+    * waits for every started query's terminated event first: events of
+    * one query reach the listener in order, so nothing is counted early. */
+  private def microBatches(body: => Any): Seq[Int] = {
+    import org.apache.spark.sql.streaming.StreamingQueryListener
+    import org.apache.spark.sql.streaming.StreamingQueryListener._
+    val started = java.util.concurrent.ConcurrentHashMap.newKeySet[java.util.UUID]()
+    val ended = java.util.concurrent.ConcurrentHashMap.newKeySet[java.util.UUID]()
+    val batches = java.util.concurrent.ConcurrentHashMap.newKeySet[(java.util.UUID, Long)]()
+    val listener = new StreamingQueryListener {
+      override def onQueryStarted(e: QueryStartedEvent): Unit = started.add(e.id)
+      override def onQueryProgress(e: QueryProgressEvent): Unit =
+        if (e.progress.numInputRows > 0) batches.add((e.progress.id, e.progress.batchId))
+      override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ended.add(e.id)
+    }
+    val streams = StreamReplay.replaySession(spark).streams
+    streams.addListener(listener)
+    try {
+      body
+      val deadline = System.nanoTime() + 60L * 1000000000L
+      while ((started.isEmpty || !ended.containsAll(started)) && System.nanoTime() < deadline)
+        Thread.sleep(20)
+      assert(started.size > 0 && ended.containsAll(started), "query terminated events missing")
+    } finally streams.removeListener(listener)
+    import scala.jdk.CollectionConverters._
+    started.asScala.toSeq.map(id => batches.asScala.count(_._1 == id))
+  }
+
+  /** Non-empty rounds of the replay feed over `ids` (already in the
+    * replay's order): `nChunks` chunks, the `id % 13 == 0` subset of each
+    * non-final chunk moved one chunk forward. */
+  private def feedRounds(ids: Seq[Long], nChunks: Int = 6): Int = {
+    val size = math.max(1, (ids.length + nChunks - 1) / nChunks)
+    val chunks = ids.grouped(size).toSeq
+    val fed = Array.fill(chunks.length)(0)
+    chunks.zipWithIndex.foreach { case (c, i) =>
+      c.foreach(id => fed(if (i < chunks.length - 1 && id % 13 == 0) i + 1 else i) += 1)
+    }
+    fed.count(_ > 0)
+  }
+
+  test("each replay runs one micro-batch per non-empty feed round plus its sentinel rounds") {
+    val ev = tables.events.select("user_id", "event_id", "ts", "event_type")
+    val byTime = ev.select(col("event_id").cast("long"), col("ts").cast("timestamp"))
+      .as[(Long, java.sql.Timestamp)].collect()
+      .sortBy(r => (r._2.getTime, r._1)).map(_._1).toSeq
+    val byId = byTime.sorted
+    val timed = feedRounds(byTime)
+    assert(timed >= 2)
+    // advance-and-flush pair: 2 sentinel rounds
+    assert(microBatches(StreamReplay.sessionReplay(
+      spark, ev.select("user_id", "event_id", "ts"))) == Seq(timed + 2))
+    // eviction probe (2 rounds) before the advance-and-flush pair
+    assert(microBatches(StreamReplay.dedupReplay(
+      spark, ev.select("user_id", "event_id", "ts"))) == Seq(timed + 4))
+    // the pair lands on both streams at once: still 2 rounds
+    assert(microBatches(StreamReplay.intervalJoinReplay(
+      spark, ev.select("user_id", "event_id", "ts"))) == Seq(timed + 2))
+    // no sentinels: the changelog needs no watermark
+    assert(microBatches(StreamReplay.latestByKeyReplay(
+      spark, ev.select("user_id", "event_type", "event_id"))) == Seq(feedRounds(byId)))
+  }
+
+  test("a replay leaves no active query and no checkpoint directory, on success and on failure") {
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    def checkpoints: Set[String] = Option(tmp.listFiles()).toSeq.flatten
+      .map(_.getName).filter(_.startsWith(StreamReplay.CheckpointPrefix)).toSet
+    val replay = StreamReplay.replaySession(spark)
+    val before = checkpoints
+    StreamReplay.sessionReplay(spark, tables.events.select("user_id", "event_id", "ts"))
+    assert(replay.streams.active.isEmpty, "a successful replay left a query running")
+    assert(checkpoints -- before == Set.empty, "a successful replay left its checkpoint")
+    // the runner itself, with a result projection that throws after the feed
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = replay.sqlContext
+    val ms = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Long)]
+    var created = Set.empty[String]
+    val e = intercept[IllegalStateException](
+      StreamReplay.run(spark, ms, ms.toDF(), Seq(Seq((1L, 2L)))) { c =>
+        created = checkpoints -- before
+        assert(c.rows.map(r => (r.getLong(0), r.getLong(1))) == Seq((1L, 2L)))
+        throw new IllegalStateException("result projection failed")
+      })
+    assert(e.getMessage == "result projection failed")
+    assert(created.size == 1, s"expected the runner's checkpoint while it ran, saw $created")
+    assert(replay.streams.active.isEmpty, "a failed replay left a query running")
+    assert(checkpoints -- before == Set.empty, "a failed replay left its checkpoint")
+  }
+
   test("the late subset is genuinely displaced (the replay is not a trivial ordered feed)") {
     // The displacement predicate (event_id % 13 == 0) must select a
     // non-empty subset of the testdata, or the late-data path is
